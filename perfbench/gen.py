@@ -83,7 +83,7 @@ SYLLABLES = ["ka", "lo", "mi", "ne", "ru", "sa", "te", "vo", "zi", "pa",
 def gen_corpus(out_dir, n_docs, seed):
     """Documents (doc_id, text, lang, source, n_chars) and 64-d embeddings
     with vec_id = doc_id. Planted: exact-duplicate pairs inside the delivery
-    split, the delivery split itself (doc_id % 4 == 3, as four stream files)
+    split, the delivery split itself (doc_id % 4 == 3, as two stream files)
     and a forget list (doc_id % 29 == 5)."""
     rng = random.Random(seed)
     vocab = sorted({"".join(rng.choice(SYLLABLES) for _ in range(rng.randint(2, 3)))
@@ -121,10 +121,12 @@ def gen_corpus(out_dir, n_docs, seed):
     write(os.path.join(out_dir, "base_emb.json"), [e for e in embs if e["vec_id"] % 4 != 3])
     dd = [d for d in docs if d["doc_id"] % 4 == 3]
     de = [e for e in embs if e["vec_id"] % 4 == 3]
-    for part in range(4):  # one file per micro-batch under maxFilesPerTrigger=1
+    # one file per micro-batch under maxFilesPerTrigger=1: the second batch
+    # of each upsert stream merges into what the first one wrote
+    for part in range(2):
         write(os.path.join(out_dir, "delivery_docs", "part-%d.json" % part),
-              [{"doc_id": d["doc_id"], "text": d["text"]} for d in dd[part::4]])
-        write(os.path.join(out_dir, "delivery_emb", "part-%d.json" % part), de[part::4])
+              [{"doc_id": d["doc_id"], "text": d["text"]} for d in dd[part::2]])
+        write(os.path.join(out_dir, "delivery_emb", "part-%d.json" % part), de[part::2])
     write(os.path.join(out_dir, "forget.json"),
           [{"vec_id": i} for i in range(n_docs) if i % 29 == 5])
     write(os.path.join(out_dir, "planted.json"),

@@ -28,11 +28,11 @@ JVM_TIMEOUT_S = 170
 
 # Workload sizes. Why each workload exists, and what each metric should
 # move, is in perfbench/metrics.json.
-GEO_POINTS = 100000
-STREAM_RATE = 30000.0  # items/s, about half the knee measured for this stream
-CORPUS_DOCS = 2000
-SERVE_CALLS = 100
-CYCLE_SHARE = 0.5      # share of --seconds spent on lifecycle cycles
+GEO_POINTS = 30000
+GEO_WARM_PASSES = 4    # untimed geo_batch passes on the separate warm-up points
+STREAM_RATE = 20000.0  # items/s, a third of the knee measured for this stream
+WARM_STREAM_S = 8      # length of the item_stream warm-up stream, in seconds of schedule
+CORPUS_DOCS = 400
 
 # Spark 4 on JDK 17 needs these when a session is created outside
 # spark-submit; the same list as the root build's javaOptions.
@@ -50,27 +50,6 @@ ADD_OPENS = [
 def fail(msg):
     print("perfbench: " + msg, file=sys.stderr)
     sys.exit(2)
-
-
-def check_benchmark_json(spec):
-    """BENCHMARK.json carries the metric lists of metrics.json without the
-    rationale; refuse to run if the two have drifted apart."""
-    try:
-        with open("BENCHMARK.json") as f:
-            bench = json.load(f)
-    except OSError:
-        return
-    driven = {w for w, d in spec["workloads"].items() if d["driven"]}
-
-    def keys(ms, fields):
-        return [tuple(m[k] for k in fields) for m in ms]
-    e2e = ("name", "unit", "better", "bound")
-    pl = ("name", "unit", "better")
-    if ({w["name"] for w in bench["workloads"]} != driven
-            or keys(bench["end_to_end"], e2e) != keys(spec["end_to_end"], e2e)
-            or keys(bench["per_layer"], pl) != keys(
-                [m for m in spec["per_layer"] if driven & set(m["workloads"])], pl)):
-        fail("BENCHMARK.json and perfbench/metrics.json disagree")
 
 
 def spark_jars():
@@ -153,16 +132,15 @@ def prepare(workload, seed, seconds, traced, ind):
     generator process, if any."""
     if workload == "geo_batch":
         gen("points", os.path.join(ind, "points.csv"), GEO_POINTS, seed)
-        gen("points", os.path.join(ind, "warm_points.csv"), GEO_POINTS // 2, seed + 104729)
-        return {"n": GEO_POINTS}, None
-    if workload == "corpus_lifecycle":
-        gen("corpus", os.path.join(ind, "corpus"), CORPUS_DOCS, seed)
-        gen("corpus", os.path.join(ind, "warm_corpus"), CORPUS_DOCS // 2, seed + 104729)
-        return {"serve_calls": SERVE_CALLS, "cycle_share": CYCLE_SHARE}, None
+        gen("points", os.path.join(ind, "warm_points.csv"), GEO_POINTS, seed + 104729)
+        return {"n": GEO_POINTS, "warm": GEO_WARM_PASSES}, None
     if workload == "item_stream":
+        if traced:  # the artifact lifecycle runs after the streams
+            gen("corpus", os.path.join(ind, "corpus"), CORPUS_DOCS, seed)
+            gen("corpus", os.path.join(ind, "warm_corpus"), CORPUS_DOCS // 4, seed + 104729)
         # one timed stream (two in a traced run: untraced, then traced)
         n = int(STREAM_RATE * seconds / (2 if traced else 1))
-        warm_n = int(STREAM_RATE * 5)
+        warm_n = int(STREAM_RATE * WARM_STREAM_S)
         files = ["warm_items.txt", "items_1.txt"] + (["items_2.txt"] if traced else [])
         for i, f in enumerate(files):
             count = warm_n if i == 0 else n
@@ -183,11 +161,17 @@ def main():
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     a = ap.parse_args()
-    with open(os.path.join(HERE, "metrics.json")) as f:
-        spec = json.load(f)
-    if a.workload not in spec["workloads"]:
+    try:
+        with open("BENCHMARK.json") as f:
+            bench = json.load(f)
+    except OSError:
+        fail("no BENCHMARK.json: run from the repository root")
+    if a.workload not in {w["name"] for w in bench["workloads"]}:
         fail("unknown workload " + a.workload)
-    check_benchmark_json(spec)
+    # the workloads on which each per-layer metric's layer does work
+    with open(os.path.join(HERE, "metrics.json")) as f:
+        active = {k: set(v["workloads"]) for k, v in json.load(f)["metrics"].items()
+                  if "workloads" in v}
 
     jars = spark_jars()
     classes = build(jars)
@@ -207,14 +191,22 @@ def main():
                     "--threads", str(state_start["nproc"])]
         for k, v in params.items():
             jvm_args += ["--" + k, str(v)]
-        cmd = (["java", "-Xmx3g", "-Xss8m", "-XX:ReservedCodeCacheSize=512m",
+        # a fixed heap: with -Xms at its default, each full collection the
+        # heap probe makes shrinks the heap, and the pass after it regrows it
+        # through many more young collections (geo_batch pass_s swung 3.2-5.1 s
+        # from run to run; with a fixed heap, 2.8-3.2 s)
+        cmd = (["java", "-Xms3g", "-Xmx3g", "-Xss8m", "-XX:ReservedCodeCacheSize=512m",
                 "-Djava.io.tmpdir=" + tmpd]
                + [x for p in ADD_OPENS for x in ("--add-opens", p + "=ALL-UNNAMED")]
                + ["-cp", classes + os.pathsep + os.path.join(jars, "*"), "perfbench.Main"])
         launch_ms = time.time() * 1000.0
+        # Spark's scratch (block manager and shuffle files) goes under the run
+        # directory: SPARK_LOCAL_DIRS takes precedence over the spark.local.dir
+        # the library's session sets
+        env = dict(os.environ, SPARK_LOCAL_DIRS=tmpd)
         with open(os.path.join(run_dir, "jvm.log"), "w") as log:
             jvm = subprocess.Popen(cmd + jvm_args + ["--launch-ms", "%.3f" % launch_ms],
-                                   stdout=log, stderr=subprocess.STDOUT)
+                                   stdout=log, stderr=subprocess.STDOUT, env=env)
             try:
                 code = jvm.wait(timeout=JVM_TIMEOUT_S)
             except subprocess.TimeoutExpired:
@@ -247,17 +239,12 @@ def main():
     for k, (v, u) in metrics.items():
         print("%s %s %s %s" % (k, v, u, a.workload))
 
-    # the driven workloads report the per-layer metrics of BENCHMARK.json;
-    # a workload run by hand also reports its own
-    driven = {w for w, d in spec["workloads"].items() if d["driven"]} | {a.workload}
-    wanted = spec["end_to_end"] if a.trace == 0 else \
-        [m for m in spec["per_layer"] if driven & set(m["workloads"])]
     out, missing = {}, []
-    for m in wanted:
+    for m in bench["end_to_end" if a.trace == 0 else "per_layer"]:
         name = m["name"]
         if name in metrics and metrics[name][0] is not None:
             out[name] = {"value": metrics[name][0], "unit": m["unit"]}
-        elif a.trace == 1 and a.workload not in m["workloads"]:
+        elif a.trace == 1 and a.workload not in active[name]:
             out[name] = {"value": 0.0, "unit": m["unit"]}  # layer idle on this workload
         else:
             missing.append(name)
@@ -273,8 +260,10 @@ def main():
                    "attempted": res["attempted"], "failed": res["failed"],
                    "metrics": {k: {"value": v, "unit": u} for k, (v, u) in metrics.items()},
                    "host": {"start": state_start, "end": state_end}}, f, indent=1)
-    if os.path.exists(os.path.join(outd, "spans.jsonl")):
-        shutil.copy(os.path.join(outd, "spans.jsonl"), stem + ".spans.jsonl")
+    shutil.copy(os.path.join(run_dir, "jvm.log"), stem + ".log")
+    for spans in ("spans.jsonl", "lifecycle/spans.jsonl"):
+        if os.path.exists(os.path.join(outd, spans)):
+            shutil.copy(os.path.join(outd, spans), stem + "." + spans.replace("/", "."))
     shutil.rmtree(run_dir, ignore_errors=True)
     print(json.dumps({"correct": ok, "attempted": res["attempted"], "failed": res["failed"],
                       "metrics": out}))

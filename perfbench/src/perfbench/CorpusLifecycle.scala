@@ -11,17 +11,25 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Imi, Retrieval}
 import graft.streaming.{DedupStream, IndexUpsertStream, LexiconUpsertStream}
 
-/** corpus_lifecycle: artifact writes beside reads. One cycle builds a
-  * fresh IMI index (with its SQ8 tier) and BM25 lexicon over the base
-  * split, screens the delivery for exact duplicates, streams the delivery
-  * into both artifacts, forgets a list of ids and compacts both. Then a
-  * closed-loop client (one at a time) alternates ANN and BM25 serves on
-  * the last cycle's artifacts, each on a fresh seeded query batch. */
+/** The corpus artifact lifecycle: artifact writes beside reads. One cycle
+  * builds a fresh IMI index (with its SQ8 tier) and BM25 lexicon over the
+  * base split, screens the delivery for exact duplicates, streams the
+  * delivery into both artifacts, forgets a list of ids and compacts both.
+  * Then a closed-loop client (one at a time) alternates ANN and BM25 serves
+  * on the last cycle's artifacts, each on a fresh seeded query batch.
+  *
+  * It is not a workload of its own: its serve percentiles swing more from
+  * run to run than an end-to-end bound allows at any serve count that fits
+  * the benchmark's time. It runs in item_stream's traced run, after the
+  * streams, and reports per-layer metrics only ([[layers]]). */
 object CorpusLifecycle {
   val Calls = Seq("persist_index", "persist_lexicon", "dedup_screen", "index_upsert_stream",
     "lexicon_upsert_stream", "delete_from_index", "compact_index", "compact_lexicon")
   val StreamCalls = Seq("dedup_screen", "index_upsert_stream", "lexicon_upsert_stream")
   val QueriesPerBatch = 5
+  // serves per timed phase: about one in six is a slow outlier, so with
+  // fewer calls p90 flips between the slow and the fast cluster
+  val MinServes = 40
 
   final case class Corpus(dir: Path, spark: SparkSession) {
     private def json(schema: String, name: String): DataFrame =
@@ -115,119 +123,98 @@ object CorpusLifecycle {
     json.substring(i, json.indexOf('"', i))
   }
 
-  def run(spark: SparkSession, a: Args, res: Result): Unit = {
+  /** Run the lifecycle in a traced run of another workload, with its own
+    * recorder and output directory. The warm-up cycle is untraced; the
+    * timed cycle and the serves after it are traced. Adds its checks to
+    * `res` and reports per-layer metrics only. */
+  def layers(spark: SparkSession, a: Args, res: Result): Unit = {
     val rec = new Recorder(spark, res, progress = false)
+    val out = Files.createDirectories(a.out.resolve("lifecycle"))
     val corpus = Corpus(a.in.resolve("corpus"), spark)
     val warm = Corpus(a.in.resolve("warm_corpus"), spark)
-    val roots = a.out.resolve("artifacts")
-    val nServe = a.param("serve_calls").toInt
+    val roots = out.resolve("artifacts")
     val warmQ = new Queries(spark, warm, a.seed + 1)
     val queries = new Queries(spark, corpus, a.seed)
 
-    def serveLoop(idx: String, lex: String, q: Queries, calls: Int): Seq[(String, Seq[Row])] =
-      (0 until calls).map { i =>
-        val (emb, text) = q.batch(i)
-        if (i % 2 == 0) "serve_ann" -> rec.call("serve_ann")(
-          Imi.annImiServed(emb, idx, nQueries = QueriesPerBatch).collect().toSeq)
-        else "serve_bm25" -> rec.call("serve_bm25")(Retrieval.bm25ServedQueries(text, lex).collect().toSeq)
-      }
+    def serve(idx: String, lex: String, q: Queries, i: Int): (String, Seq[Row]) = {
+      val (emb, text) = q.batch(i)
+      if (i % 2 == 0) "serve_ann" -> rec.call("serve_ann")(
+        Imi.annImiServed(emb, idx, nQueries = QueriesPerBatch).collect().toSeq)
+      else "serve_bm25" -> rec.call("serve_bm25")(Retrieval.bm25ServedQueries(text, lex).collect().toSeq)
+    }
 
-    // set-up: one untimed cycle and a few serves on the warm-up corpus
-    rec.inPass(-1)(res.guard("warm-up") {
+    // warm-up: one untimed cycle and 6 serves on the small warm-up corpus
+    // (the cold cost is per plan shape, not per row, so a small corpus
+    // compiles what the timed cycle runs)
+    rec.inPass(-1)(res.guard("lifecycle warm-up") {
       val r = roots.resolve("warmup")
       cycle(spark, rec, res, warm, r, "warm", warmQ.batch(0), mutable.Map.empty)
-      serveLoop(r.resolve("idx").toString, r.resolve("lex").toString, warmQ, 6)
+      (0 until 6).foreach(serve(r.resolve("idx").toString, r.resolve("lex").toString, warmQ, _))
     })
 
-    val dedups = mutable.ArrayBuffer.empty[Seq[Row]]
+    // timed and traced: one cycle, then MinServes closed-loop serves on its
+    // artifacts
+    rec.tracing(true)
+    val root = roots.resolve("cycle")
+    val idx = root.resolve("idx").toString
+    val lex = root.resolve("lex").toString
     val written = mutable.Map.empty[String, mutable.ArrayBuffer[(Double, Double)]]
-    val stored = mutable.ArrayBuffer.empty[Double]
-    var lastRoot: Option[Path] = None
-    val cycleSeconds = a.seconds * a.param("cycle_share").toDouble
-    val (t0, ps) = Main.timedPasses(rec, res, a.copy(seconds = cycleSeconds), minPasses = 2) { i =>
-      val r = roots.resolve(s"cycle-$i")
-      dedups += cycle(spark, rec, res, corpus, r, s"c$i", queries.batch(1000000 + i), written)
-      stored += Main.bytesUnder(r).toDouble
-      lastRoot.foreach(deleteRec)
-      lastRoot = Some(r)
-      Jvm.liveHeapMb()
-    }
-    val root = lastRoot.getOrElse(roots.resolve("missing"))
-    val served = rec.inPass(ps.length)(res.guard("serve") {
-      serveLoop(root.resolve("idx").toString, root.resolve("lex").toString, queries, nServe)
+    val dedup = rec.inPass(0)(res.guard("lifecycle cycle") {
+      cycle(spark, rec, res, corpus, root, "c0", queries.batch(1000000), written)
+    })
+    val stored = Main.bytesUnder(root).toDouble
+    val served = rec.inPass(1)(res.guard("lifecycle serve") {
+      (0 until MinServes).map(serve(idx, lex, queries, _))
     }).getOrElse(Nil)
-    val heapAfterServe = Jvm.liveHeapMb()
 
     // untimed checks
     val expected = expectedDedup(corpus)
-    dedups.foreach { d =>
-      val got = d.map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      res.check("dedup_state_matches_corpus", got == expected,
-        s"${got.size} groups vs ${expected.size} expected")
-    }
+    val got = dedup.toSeq.flatten.map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    res.check("dedup_state_matches_corpus", got == expected,
+      s"${got.size} groups vs ${expected.size} expected")
     val planted = corpus.lines("planted.json").map(l => (num(l, "copy"), num(l, "orig")))
-    dedups.foreach { d =>
-      val keepers = d.map(r => (r.getLong(1), r.getLong(2))).toMap
-      res.check("planted_duplicates_screened",
-        planted.forall { case (cp, orig) => keepers.get(math.min(cp, orig)).exists(_ >= 2) },
-        s"${planted.length} planted pairs")
-    }
+    val keepers = got.map(g => (g._2, g._3)).toMap
+    res.check("planted_duplicates_screened",
+      planted.forall { case (cp, orig) => keepers.get(math.min(cp, orig)).exists(_ >= 2) },
+      s"${planted.length} planted pairs")
     val ann = served.filter(_._1 == "serve_ann").flatMap(_._2)
     res.check("forgotten_never_served", ann.nonEmpty &&
       ann.forall(r => !corpus.forgetIds(r.getAs[Number]("nid").longValue)),
       s"${ann.length} served ANN rows")
-    res.check("serve_calls_made", served.length == nServe, s"${served.length} of $nServe")
+    res.check("serve_calls_made", served.length == MinServes, s"${served.length} of $MinServes")
 
-    val timedCalls = rec.calls.filter(c => c.pass >= 0 && Calls.contains(c.name)).toSeq
-    Main.passE2e(rec, res, a, t0, ps)
-    res.metric("heap_live_peak_mb", (ps.map(_.heapMb) :+ heapAfterServe).filterNot(_.isNaN).max, "MB")
-    res.metric("store_amp", Stats.median(stored.toSeq) / corpus.bytes, "ratio")
-    val lat = timedCalls.map(_.ms)
-    res.metric("lat_p50_ms", Stats.q(lat, 0.5), "ms")
-    res.metric("lat_p95_ms", Stats.q(lat, 0.95), "ms")
-    val serveCalls = rec.calls.filter(c => c.pass >= 0 && c.name.startsWith("serve_")).toSeq
-    res.metric("serve_p50_ms", Stats.q(serveCalls.map(_.ms), 0.5), "ms")
-    res.metric("serve_p90_ms", Stats.q(serveCalls.map(_.ms), 0.9), "ms")
-    res.metric("fail_frac", res.failFrac, "ratio")
-    res.metric("samples.cycles", ps.length.toDouble, "count")
-    res.metric("samples.serve_calls", serveCalls.length.toDouble, "count")
-
-    if (rec.traced) {
-      rec.drain()
-      rec.addSparkSpans()
-      val tracedIdx = ps.filter(_.traced).map(_.idx).toSet
-      val tc = timedCalls.filter(c => tracedIdx(c.pass))
-      for (name <- Calls)
-        Main.callLayer(rec, res, s"artifacts.$name", tc.filter(_.name == name), a.threads, withSkew = false)
-      // bytes and files each call leaves under the artifact root, from the
-      // directory listings taken around it in the traced cycle
-      for ((name, w) <- written) {
-        res.metric(s"artifacts.$name.written_mb", Stats.median(w.map(_._1).toSeq), "MB")
-        res.metric(s"artifacts.$name.files_written", Stats.median(w.map(_._2).toSeq), "count")
-      }
-      for (name <- StreamCalls) {
-        val bs = tc.filter(_.name == name).map(rec.progressOf)
-        res.metric(s"streaming.$name.batches", Stats.median(bs.map(_.length.toDouble)), "count")
-        res.metric(s"streaming.$name.commit_ms_sum",
-          Stats.median(bs.map(_.map(b => b.d("walCommit") + b.d("commitOffsets")).sum.toDouble)), "ms")
-        res.metric(s"streaming.$name.state_commit_ms_sum",
-          Stats.median(bs.map(_.map(_.stateCommitMs).sum.toDouble)), "ms")
-      }
-      for ((kind, name) <- Seq("ann" -> "serve_ann", "bm25" -> "serve_bm25")) {
-        val cs = serveCalls.filter(_.name == name)
-        val st = cs.map(c => rec.stats(Seq(c)))
-        res.metric(s"serve.$kind.p50_ms", Stats.median(cs.map(_.ms)), "ms")
-        res.metric(s"serve.$kind.jobs", Stats.median(st.map(_.jobs.toDouble)), "count")
-        res.metric(s"serve.$kind.in_mb", Stats.median(st.map(_.inputMb)), "MB")
-      }
-      Main.traceLayer(rec, res, ps)
-      rec.writeSpans(a.out.resolve("spans.jsonl"), s"corpus_lifecycle-${a.seed}")
+    rec.drain()
+    rec.addSparkSpans()
+    val tc = rec.calls.filter(c => c.pass == 0 && Calls.contains(c.name)).toSeq
+    res.metric("lifecycle.cycle_s", tc.map(_.ms).sum / 1000.0, "s")
+    res.metric("lifecycle.store_amp", stored / corpus.bytes, "ratio")
+    val serveCalls = rec.calls.filter(c => c.pass == 1).toSeq
+    res.metric("lifecycle.serve_p50_ms", Stats.q(serveCalls.map(_.ms), 0.5), "ms")
+    res.metric("lifecycle.serve_p90_ms", Stats.q(serveCalls.map(_.ms), 0.9), "ms")
+    for (name <- Calls)
+      Main.callLayer(rec, res, s"artifacts.$name", tc.filter(_.name == name), a.threads, withSkew = false)
+    // bytes and files each call leaves under the artifact root, from the
+    // directory listings taken around it
+    for ((name, w) <- written) {
+      res.metric(s"artifacts.$name.written_mb", Stats.median(w.map(_._1).toSeq), "MB")
+      res.metric(s"artifacts.$name.files_written", Stats.median(w.map(_._2).toSeq), "count")
     }
-  }
-
-  private def deleteRec(p: Path): Unit = if (Files.exists(p)) {
-    val st = Files.walk(p)
-    try st.iterator().asScala.toSeq.reverse.foreach(Files.delete) finally st.close()
+    for (name <- StreamCalls) {
+      val bs = tc.filter(_.name == name).map(rec.progressOf)
+      res.metric(s"streaming.$name.batches", Stats.median(bs.map(_.length.toDouble)), "count")
+      res.metric(s"streaming.$name.commit_ms_sum",
+        Stats.median(bs.map(_.map(b => b.d("walCommit") + b.d("commitOffsets")).sum.toDouble)), "ms")
+      res.metric(s"streaming.$name.state_commit_ms_sum",
+        Stats.median(bs.map(_.map(_.stateCommitMs).sum.toDouble)), "ms")
+    }
+    for ((kind, name) <- Seq("ann" -> "serve_ann", "bm25" -> "serve_bm25")) {
+      val cs = serveCalls.filter(_.name == name)
+      val st = cs.map(c => rec.stats(Seq(c)))
+      res.metric(s"serve.$kind.p50_ms", Stats.median(cs.map(_.ms)), "ms")
+      res.metric(s"serve.$kind.jobs", Stats.median(st.map(_.jobs.toDouble)), "count")
+      res.metric(s"serve.$kind.in_mb", Stats.median(st.map(_.inputMb)), "MB")
+    }
+    rec.writeSpans(out.resolve("spans.jsonl"), s"item_stream-${a.seed}-lifecycle")
   }
 
   /** md5(text) → (keeper = min doc_id, copies) over the delivery split. */

@@ -87,7 +87,9 @@ object ItemStream {
 
     rec.inPass(-1)(stream(0, "warmup_stream", a.param("warm_n").toLong, "warm_items.txt"))
     val t0 = Clock.nowMs
+    val jMain = Jvm.snap()
     val main = rec.inPass(0)(stream(1, "stream", n, "items_1.txt"))
+    val mainCpuS = (Jvm.snap() - jMain).cpuNs / 1e9
     val j0 = Jvm.snap()
     val traced = if (!a.traced) None else {
       rec.tracing(true)
@@ -97,10 +99,14 @@ object ItemStream {
     val heap = Jvm.liveHeapMb()
 
     (main.toSeq ++ traced.flatMap(_._1)).foreach(check(res, _))
-    res.metric("setup_s", (t0 - a.launchMs) / 1000.0, "s")
+    // the warm-up stream's send schedule is the generator's time, not the
+    // program's, so it is left out of set-up
+    res.metric("setup_s", (t0 - a.launchMs) / 1000.0 - a.param("warm_n").toLong / rate, "s")
     main.foreach { s =>
       val (lat, _) = latencies(s, rate)
-      res.metric("pass_s", s.call.ms / 1000.0, "s")
+      println("batches (start s after t0, rows, trigger ms): " + folded(s).map(b =>
+        f"${(b.startMs - s.t0Ms) / 1000}%.1f/${b.rows}/${b.d("triggerExecution")}").mkString(" "))
+      res.metric("pass_s", mainCpuS, "s")
       res.metric("lat_p50_ms", Stats.q(lat, 0.5), "ms")
       res.metric("lat_p95_ms", Stats.q(lat, 0.95), "ms")
       val trig = folded(s).map(_.d("triggerExecution").toDouble)
@@ -129,12 +135,14 @@ object ItemStream {
       res.metric("driver.fold_items_per_s", foldRate(s), "1/s")
       res.metric("bench.gen_late_ms_max",
         Seq(1, 2).map(c => waitStatus(status, c, "end")("late_ms_max")).max, "ms")
-      main.foreach(m => res.metric("bench.trace_overhead_frac", s.call.ms / m.call.ms - 1.0, "ratio"))
+      res.metric("bench.trace_overhead_frac", jvm.cpuNs / 1e9 / mainCpuS - 1.0, "ratio")
       Main.jvmLayer(res, Seq(jvm))
       rec.drain()
       rec.addSparkSpans()
       Main.sparkLayer(rec, res, Seq(Seq(s.call)))
       rec.writeSpans(a.out.resolve("spans.jsonl"), s"item_stream-${a.seed}")
+      rec.tracing(false)
+      CorpusLifecycle.layers(spark, a, res)
     }
   }
 

@@ -84,7 +84,8 @@ object Jvm {
   def liveHeapMb(): Double =
     // the lowest of three collections 200 ms apart: Spark's ContextCleaner
     // releases the shuffle and broadcast state of finished jobs only after
-    // a collection has found them unreachable
+    // a collection has found them unreachable (with two collections 100 ms
+    // apart, the reading swung between 85 and 167 MB from run to run)
     (1 to 3).map { _ =>
       System.gc()
       Thread.sleep(200)
@@ -112,12 +113,19 @@ object Main {
     val a = Args(kv("workload"), kv("seed").toLong, kv("seconds").toDouble,
       kv("trace") == "1", Paths.get(kv("in")), Paths.get(kv("out")),
       kv("threads").toInt, kv("launch-ms").toDouble, kv)
-    val spark = graft.SparkLocal.session(a.threads.toString)
+    val spark = graft.SparkLocal.session(a.threads.toString, Seq(
+      // Spark's cache of generated classes keeps 100 entries in four LRU
+      // segments of 25. Which segment a class lands in hangs on the literals
+      // inlined into its code (geo_batch's centers and radius), so in about
+      // half of the runs one segment overflowed and every repeated pass
+      // recompiled its 17-24 classes: 15-25% slower passes, and a bimodal
+      // spread over seeds. With room for every class a run generates, each
+      // class is compiled once, during set-up.
+      "spark.sql.codegen.cache.maxEntries" -> "2000"))
     val res = new Result(a)
     try a.workload match {
       case "geo_batch" => GeoBatch.run(spark, a, res)
       case "item_stream" => ItemStream.run(spark, a, res)
-      case "corpus_lifecycle" => CorpusLifecycle.run(spark, a, res)
       case w => sys.error(s"unknown workload $w")
     } finally {
       res.write(a.out.resolve("result.json"))
