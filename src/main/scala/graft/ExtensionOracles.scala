@@ -52,7 +52,7 @@ object ExtensionOracles {
     }.mkString(" + ")
 
   /** Pinned trained IVF coarse-quantizer centers ([[IvfPins]], regenerate
-    * with `runMain graft.IvfCenterPin`) as a DuckDB VALUES relation.
+    * with `runMain graft.Pins`) as a DuckDB VALUES relation.
     * Elements are printed with an E0 suffix so DuckDB lexes them as DOUBLE
     * directly: a plain decimal literal becomes DECIMAL(19,18), whose cast to
     * DOUBLE is not correctly rounded (measured: ~12% of full-mantissa values
@@ -76,7 +76,7 @@ object ExtensionOracles {
 
   /** The RETRAINED banding cells of the lifecycle loop's recovery leg —
     * [[IvfDriftPins]], trained on the drifted corpus (regenerate with
-    * `runMain graft.IvfDriftCenterPin`). */
+    * `runMain graft.Pins`). */
   private def ivfDriftCentCte: String =
     centCteFrom(IvfDriftPins.embeddingsDriftK32I2)
 
@@ -213,7 +213,7 @@ object ExtensionOracles {
        |                  JOIN de eb ON cand.b = eb.vec_id)""".stripMargin
 
   /** Pinned product-space IMI quantizer ([[ImiPins]], regenerate with
-    * `runMain graft.ImiCenterPin`) and its full probe chain — member
+    * `runMain graft.Pins`) and its full probe chain — member
     * table `mem` (per vector: argmin-L2 first-half cell × argmin-L2
     * second-half cell, the [[graft.operators.KMeans.trainSubCenters]]
     * assignment discipline) and ranked probe results `ir` (per query:
@@ -229,7 +229,7 @@ object ExtensionOracles {
 
   /** [[imiProbeCtes]] over the UPSERT-bootstrap pins ([[ImiUpsertPins]] —
     * books trained on the vec_id % 4 ≠ 3 base split, regenerate with
-    * `runMain graft.ImiUpsertCenterPin`): the q_ann_upsert oracle assigns
+    * `runMain graft.Pins`): the q_ann_upsert oracle assigns
     * the FULL corpus with the frozen base-trained books, which is the
     * upsert-≡-bulk invariance itself — under frozen books, per-row
     * assignment is a pure function, so (persisted base members + appended
@@ -322,7 +322,7 @@ object ExtensionOracles {
   }
 
   /** Pinned per-subspace PQ codebooks ([[PqPins]], regenerate with
-    * `runMain graft.PqCenterPin`) as one (s, cid, cv) VALUES relation —
+    * `runMain graft.Pins`) as one (s, cid, cv) VALUES relation —
     * the same E0-literal discipline as [[ivfCentCte]]. */
   private def pqCentCte: String = pqCentCteFor(PqPins.embeddingsM8K16I2)
 

@@ -146,7 +146,7 @@ object SparkEntry {
     // MRFFT is iterative (not SQL-expressible as a query), but the
     // fixed-partitioning variant makes its centers DETERMINISTIC, so the
     // radius gets a full hash-checked oracle: the sf0.01 centers are pinned
-    // as literals in the SQL (regenerate with `runMain graft.MrfftCenterPin`).
+    // as literals in the SQL (regenerate with `runMain graft.Pins`).
     // If the pipeline ever produces different centers, the radius — and the
     // hash — change, and the gate fails loudly.
     "q_mrfft_radius" -> ((s, dir) => {

@@ -12,8 +12,8 @@ import org.apache.spark.sql.SparkSession
   */
 object SparkLocal {
 
-  /** One session builder for every harness main (Verify/Bench/Profile/
-    * ScaleProof/SkewProof/Explain/pin generators). Before round 7 the same
+  /** One session builder for every harness main (Verify/Bench/Prof/
+    * ScaleProof/SkewProof/Explain/Pins). Before round 7 the same
     * six config lines were copy-pasted across ten mains and drifted: Bench
     * never pinned the session timezone, so any timestamp-typed read outside
     * the Verify gate would have been host-timezone-dependent. Centralizing

@@ -100,7 +100,11 @@ object Hw1Main {
 }
 
 /** HW2 — `Hw2Main <file> <M> <K> <L>` (`big_data_computing_2.py:120-171`):
-  * MRFFT radius becomes the MRApproxOutliers threshold. */
+  * MRFFT radius becomes the MRApproxOutliers threshold. Without `--seed`
+  * the centers, and so the radius, are deterministic for a given input
+  * split, i.e. a given file and core count: the ids come from
+  * [[Sources.pointsCsv]], whose monotonically_increasing_id depends on the
+  * scan split. */
 object Hw2Main {
   def main(args: Array[String]): Unit = {
     require(args.length == 4 || args.length == 6 && args(4) == "--seed",
@@ -110,7 +114,8 @@ object Hw2Main {
     // faithful-randomness mode (big_data_computing_2.py:19 — each
     // SequentialFFT call draws its first center uniformly at random):
     // --seed S replays the reference's uniform first-center choice from a
-    // seeded RNG; without it the injectable deterministic default applies.
+    // seeded RNG; without it the deterministic MRFFT applies (min-id first
+    // centers over the fixed pmod(id, L*128) partitioning).
     val seed: Option[Long] = if (args.length == 6) Some(args(5).toLong) else None
     val (spark, owned) = AppSession.get("graft-hw2")
     // spark.locality.wait=0s passthrough (big_data_computing_2.py:124) is
@@ -122,10 +127,7 @@ object Hw2Main {
     println(s"Number of points = $n")
 
     val vecs = points.select(col("id"), array(col("x"), col("y")).as("vec")).cache()
-    val (centers, ms1, ms2) = seed match {
-      case Some(s) => Clustering.mrfftCentersRandomTimed(vecs, k, l, s)
-      case None    => Clustering.mrfftCentersTimed(vecs, k, l)
-    }
+    val (centers, ms1, ms2) = Clustering.mrfft(vecs, k, l, seed)
     val (radius, ms3) = AppSession.timedMs(
       Clustering.radius(vecs, centers).head().getDouble(0))
     println(s"Running time of MRFFT R1 = $ms1 ms") // :162-164

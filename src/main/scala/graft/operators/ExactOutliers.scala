@@ -64,7 +64,6 @@ object ExactOutliers {
     * rides the hot loop). In the kernel the same idea loses to branch
     * mispredicts and the extra owner-index bookkeeping. */
   def ballCounts(points: DataFrame, d: Double,
-                 pruneProbes: Boolean = true,
                  capAbove: Option[Int] = None): DataFrame = {
     val spark = points.sparkSession
     import spark.implicits._
@@ -101,15 +100,12 @@ object ExactOutliers {
     // probed, so a broadcast semi-join against the occupied-cell directory
     // drops it BEFORE the shuffle. The directory is |occupied cells| ≈
     // covered-area/D² — bounded by data geometry, not row count, so it stays
-    // broadcastable for any clustered dataset; set pruneProbes=false for
-    // pathological near-uniform sparsity where |cells| → |points|. A point's
+    // broadcastable for any clustered dataset; only near-uniform sparsity,
+    // where |cells| → |points|, grows it toward the point count. A point's
     // own-cell replica always survives (its cell is occupied by itself).
-    val pruned =
-      if (!pruneProbes) replicas
-      else replicas.join(
+    replicas.join(
         broadcast(bucketed.select(col("bi").as("ci"), col("bj").as("cj")).distinct()),
         col("pi") === col("ci") && col("pj") === col("cj"), "left_semi")
-    pruned
       // slim the shuffle row to (packed cell key, nullable id, x, y): the
       // probe cell packs into one long (bi<<32 | bj — collision-free while
       // cell indices fit 32 bits, i.e. coordinate/D < 2^31) and the `own`

@@ -2,6 +2,7 @@ package graft.sources
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
+import scala.util.{Failure, Try}
 
 /** Overlap INDEPENDENT Spark actions from driver threads (optimization
   * guide §2.6 "Overlap independent jobs"). The artifact-lifecycle gates
@@ -22,11 +23,12 @@ import scala.concurrent.duration.Duration
   *    ([[graft.operators.Retrieval.upsertLexicon]]'s dl-before-postings);
   *  - anything reading an artifact version another thunk is publishing.
   *
-  * Failure semantics: the first thunk runs on the caller thread, so its
-  * exception propagates immediately; a worker thunk's exception re-throws
-  * at its Await. A sibling still in flight when that happens only writes
-  * into the unpublished subtree (junk pruned at the next publish) — the
-  * same crash window a sequential persist already has. */
+  * Failure semantics: every thunk is awaited before anything is thrown,
+  * so no sibling keeps submitting Spark jobs after the call returns. The
+  * first failure in thunk order is rethrown with the others attached by
+  * `addSuppressed`. A failed call leaves only junk in the unpublished
+  * subtree (pruned at the next publish) — the same crash window a
+  * sequential persist already has. */
 object Par {
 
   private lazy val ec: ExecutionContext = ExecutionContext.fromExecutor(
@@ -40,17 +42,33 @@ object Par {
     * both results. */
   def join[A, B](a: => A, b: => B): (A, B) = {
     val fb = submit(() => b)
-    val ra = a
-    (ra, Await.result(fb, Duration.Inf))
+    val ra = Try(a)
+    val rb = settle(fb)
+    rethrowFirst(Seq(ra, rb))
+    (ra.get, rb.get)
   }
 
-  /** Run all thunks concurrently (the first on the caller thread); await
-    * every result in order. */
-  def all[A](thunks: (() => A)*): Seq[A] = {
-    val tail = thunks.drop(1).map(submit)
-    val head = thunks.head()
-    head +: tail.map(Await.result(_, Duration.Inf))
-  }
+  /** Run all thunks concurrently (the first on the caller thread); return
+    * every result in order. No thunks, no results. */
+  def all[A](thunks: (() => A)*): Seq[A] =
+    if (thunks.isEmpty) Seq.empty
+    else {
+      val tail = thunks.drop(1).map(submit)
+      val outcomes = Try(thunks.head()) +: tail.map(settle)
+      rethrowFirst(outcomes)
+      outcomes.map(_.get)
+    }
+
+  private def settle[A](f: Future[A]): Try[A] =
+    Await.ready(f, Duration.Inf).value.get
+
+  private def rethrowFirst(outcomes: Seq[Try[_]]): Unit =
+    outcomes.collect { case Failure(e) => e } match {
+      case first +: rest =>
+        rest.filterNot(_ eq first).foreach(first.addSuppressed) // self-suppression throws
+        throw first
+      case _ => ()
+    }
 
   private def submit[A](t: () => A): Future[A] = {
     // a worker thread needs the caller's session as ITS thread-local

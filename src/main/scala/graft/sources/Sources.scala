@@ -44,8 +44,13 @@ object Sources {
     * against the oracle even at oracle scale, where the default floor
     * makes every call site a no-op; `-1` disables spread outright (the
     * before-plan dump switch). */
-  private def SpreadMinBytes: Long =
-    sys.props.get("graft.spread.minBytes").map(_.toLong).getOrElse(256L << 10)
+  private[graft] def spreadMinBytes: Long =
+    sys.props.get("graft.spread.minBytes").fold(256L << 10) { v =>
+      // no fallback to the default: a floor-0 Verify pass that silently
+      // ran at the default floor would check the wrong plan shapes
+      v.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"graft.spread.minBytes must be a byte count (or -1 to disable spread), got '$v'"))
+    }
   def spread(df: DataFrame): DataFrame =
     // Streaming frames pass through untouched: probing
     // queryExecution.optimizedPlan.stats on a streaming DataFrame throws
@@ -54,7 +59,7 @@ object Sources {
     // is a per-micro-batch LOSS on streaming gates anyway.
     if (df.isStreaming) df
     else {
-      val floor = SpreadMinBytes
+      val floor = spreadMinBytes
       val spark = df.sparkSession
       val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
       val oneSplit = spark.sessionState.conf.filesMaxPartitionBytes
@@ -67,8 +72,8 @@ object Sources {
     * micro-batch arrives as ONE file split, so a compute-dense stateless
     * kernel between the source and the stateful shuffle (MD5 shingling +
     * MinHash banding, 128-plane sign folds, tokenize+explode) runs as one
-    * task per batch — 0.4-0.9 s serial per micro-batch in the r15 JobProf
-    * of q_ingest_pipeline/q_neardup_stream. Spreading the stream side
+    * task per batch — 0.4-0.9 s serial per micro-batch in the r15 job
+    * profile (now `graft.Prof`) of q_ingest_pipeline/q_neardup_stream. Spreading the stream side
     * itself (unlike r14's static-side spread, whose exchange re-executed
     * per batch for no per-batch gain) parallelizes exactly the per-batch
     * work; the kernels' outputs feed a keyed stateful shuffle, so results
@@ -78,7 +83,7 @@ object Sources {
     * the same leading-id hash as [[spread]] and honouring the same `-1`
     * kill switch. */
   def spreadStream(df: DataFrame): DataFrame =
-    if (!df.isStreaming || SpreadMinBytes < 0L) df
+    if (!df.isStreaming || spreadMinBytes < 0L) df
     else df.repartition(df.sparkSession.sparkContext.defaultParallelism,
       col(df.columns.head))
 

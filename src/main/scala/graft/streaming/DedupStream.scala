@@ -298,9 +298,9 @@ object DedupStream {
     val spark = docs.sparkSession
     import spark.implicits._
     // spreadStream: the shingle+MinHash kernel otherwise runs as ONE task
-    // per micro-batch (0.4-0.9 s serial each in the r15 JobProf); the
-    // banded output feeds the keyed state shuffle, so partitioning cannot
-    // change the emitted candidate set
+    // per micro-batch (0.4-0.9 s serial each in the r15 job profile, now
+    // `graft.Prof`); the banded output feeds the keyed state shuffle, so
+    // partitioning cannot change the emitted candidate set
     graft.operators.Dedup.bandRows(
         graft.sources.Sources.spreadStream(docs), h, rows)
       .as[BandArrival]

@@ -35,8 +35,9 @@ object DriftStream {
     val spark = docs.sparkSession
     import spark.implicits._
     // spreadStream: tokenize+explode otherwise runs as ONE task per
-    // micro-batch (r15 JobProf, ~0.5 s serial each); the token rows feed
-    // the keyed count shuffle, so partitioning cannot change the sums
+    // micro-batch (r15 job profile, now `graft.Prof`, ~0.5 s serial each);
+    // the token rows feed the keyed count shuffle, so partitioning cannot
+    // change the sums
     graft.sources.Sources.spreadStream(docs)
       .select(col("source"), explode(split(col("text"), " ")).as("tok"))
       .as[TokArrival]

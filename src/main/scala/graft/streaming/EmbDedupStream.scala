@@ -65,9 +65,9 @@ object EmbDedupStream {
     val spark = vecs.sparkSession
     import spark.implicits._
     // spreadStream: the 128-plane sign-fold kernel otherwise runs as ONE
-    // task per micro-batch (r15 JobProf, ~0.5-0.8 s serial each); the
-    // banded output feeds the keyed cell-state shuffle, so partitioning
-    // cannot change the emitted candidate set
+    // task per micro-batch (r15 job profile, now `graft.Prof`, ~0.5-0.8 s
+    // serial each); the banded output feeds the keyed cell-state shuffle,
+    // so partitioning cannot change the emitted candidate set
     bander(graft.sources.Sources.spreadStream(vecs))
       .as[BandArrival]
       .groupByKey(r => (r.band, r.cid))

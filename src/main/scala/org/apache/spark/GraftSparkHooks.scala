@@ -4,7 +4,7 @@ package org.apache.spark
   * listener bus is asynchronous, so a profiler that reads its buffers
   * right after an action returns can miss job-end events still in
   * flight. `waitUntilEmpty` is `private[spark]` — this shim exposes it
-  * to the graft diagnostics (JobProf); nothing on the bench or query
+  * to the graft profiler (`graft.Prof`); nothing on the bench or query
   * path uses it. */
 object GraftSparkHooks {
   def drainListenerBus(sc: SparkContext): Unit =

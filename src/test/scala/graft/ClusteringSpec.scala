@@ -45,7 +45,7 @@ class ClusteringSpec extends AnyFunSuite with SharedSpark {
 
   test("MRFFT coreset round stays within 4x OPT and matches column-math radius") {
     val df = pts.zipWithIndex.map { case (p, i) => (i.toLong, p) }.toDF("id", "vec")
-    val centers = Clustering.mrfftCenters(df, 4, 4)
+    val centers = Clustering.mrfftCentersDeterministic(df, 4, 4)
     assert(centers.length == 4)
     val rLocal = radiusOf(centers, pts)
     assert(rLocal <= 4 * math.sqrt(2.0) + 1e-9)

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.Sources
+
 /** Source-boundary normalization contract: `Sources.events` must yield the
   * SAME epoch-nano longs whatever physical type the testdata generator
   * shipped `ts` under. Round 6 lost nine queries to exactly this drift
@@ -55,5 +57,37 @@ class SourcesSpec extends AnyFunSuite with SharedSpark {
     val dt = graft.sources.Sources.events(spark, base.getAbsolutePath)
       .schema("ts").dataType
     assert(dt === org.apache.spark.sql.types.LongType)
+  }
+
+  private val floorKey = "graft.spread.minBytes"
+  private def withFloor[T](value: Option[String])(body: => T): T = {
+    val prev = sys.props.get(floorKey)
+    value.fold(sys.props.remove(floorKey))(sys.props.put(floorKey, _))
+    try body
+    finally { prev.fold(sys.props.remove(floorKey))(sys.props.put(floorKey, _)): Unit }
+  }
+  private lazy val tiny = spark.range(10).toDF("id")
+
+  test("graft.spread.minBytes unset: the 256 KiB default floor leaves a tiny input alone") {
+    withFloor(None) {
+      assert(Sources.spreadMinBytes == (256L << 10))
+      assert(Sources.spread(tiny) eq tiny)
+    }
+  }
+
+  test("graft.spread.minBytes=-1 disables spread where floor 0 would spread") {
+    withFloor(Some("0"))(assert(!(Sources.spread(tiny) eq tiny)))
+    withFloor(Some("-1")) {
+      assert(Sources.spreadMinBytes == -1L)
+      assert(Sources.spread(tiny) eq tiny)
+    }
+  }
+
+  test("graft.spread.minBytes malformed: IllegalArgumentException naming the property and value") {
+    withFloor(Some("64k")) {
+      val e = intercept[IllegalArgumentException](Sources.spread(tiny))
+      assert(e.getMessage.contains("graft.spread.minBytes") && e.getMessage.contains("'64k'"),
+        e.getMessage)
+    }
   }
 }

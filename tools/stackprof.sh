@@ -1,5 +1,5 @@
 #!/bin/bash
-# Poor-man's sampling profiler: run `sbt runMain graft.Profile <query...>` in
+# Poor-man's sampling profiler: run `sbt runMain graft.Prof <query>` in
 # the background, sample the forked Spark JVM with jstack, print the hottest
 # RUNNABLE frames of executor task threads. Usage: tools/stackprof.sh q_name [n_samples]
 set -u
@@ -8,9 +8,9 @@ N="${2:-60}"
 OUT=/tmp/stackprof_$Q
 rm -rf "$OUT"; mkdir -p "$OUT"
 ( cd /root/repo && SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-4} \
-    sbt -batch "runMain graft.Profile $Q" > "$OUT/run.log" 2>&1 ) &
+    sbt -batch "runMain graft.Prof $Q" > "$OUT/run.log" 2>&1 ) &
 SBT_PID=$!
-# wait for the forked JVM (child of sbt's java) running graft.Profile
+# wait for the forked JVM (child of sbt's java) running graft.Prof
 JVM=""
 # the forked run JVM's cmdline is literally `java @/tmp/sbt-args...` — all
 # real args live in the argfile, so match that marker
