@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -13,10 +15,12 @@ import org.apache.spark.sql.functions._
   * MapReduce-round discipline is deleted rather than ported (SURVEY.md §4).
   *
   * The driver-side `collectAsMap` + closure-captured dict used for the 3x3/7x7
-  * neighborhood sums (`big_data_computing_1.py:87,91-96`) is replaced by an
-  * explode-neighbors + join-aggregate (SURVEY.md §2.3 J2 option a): fully
-  * distributed, no point-scale data ever crosses to the driver, and the plan
-  * survives a 100x scale-up where the collected map would OOM the driver.
+  * neighborhood sums (`big_data_computing_1.py:87,91-96`) is replaced by a
+  * block-halo kernel (SURVEY.md §2.3 J2): the cell table is routed to blocks
+  * of cells with a 3-cell halo and each block answers its own cells'
+  * windows from an array. Fully distributed, no point-scale data ever crosses to the
+  * driver, and the plan survives a 100x scale-up where the collected map
+  * would OOM the driver.
   */
 object GridOutliers {
 
@@ -40,52 +44,89 @@ object GridOutliers {
   def cellCounts(points: DataFrame, d: Double): DataFrame =
     cellify(points, d).groupBy("i", "j").agg(count(lit(1)).as("size"))
 
-  private val offsets7x7: Seq[(Int, Int)] =
-    for { di <- -3 to 3; dj <- -3 to 3 } yield (di, dj)
+  /** N3/N7 neighborhood sums (`big_data_computing_1.py:91-98` A3/J2), one
+    * row per non-empty cell: (i, j, size, n3, n7). A cell with a null index
+    * has no neighborhood and no row. */
+  def neighborStats(cells: DataFrame, m: Int): DataFrame =
+    neighborhoods(cells).filter(col("i").isNotNull && col("j").isNotNull)
 
-  /** N3/N7 neighborhood sums (`big_data_computing_1.py:91-98` A3/J2).
+  /** [[neighborStats]] plus one row (null, null, size, null, null) per cell
+    * with a null index, so that [[summary]] counts every point from the
+    * same pass.
     *
-    * Each non-empty cell scatters its count to the ≤49 cells whose 7x7 window
-    * contains it (tagging the 3x3 subset), then a group-sum per target cell and
-    * an inner join back onto the non-empty cells. The scatter fan-out is a
-    * constant 49x on the *cell* table (already aggregated, ≪ points), so this
-    * stays cheap at any scale; the join keys are the cell coords, so Catalyst
-    * plans an equi-join (broadcast when the cell table is small). */
-  def neighborStats(cells: DataFrame, m: Int): DataFrame = {
-    val contrib = cells
-      .select(col("i"), col("j"), col("size"), explode(typedlit(offsets7x7)).as("o"))
-      .select(
-        (col("i") + col("o._1")).as("ci"),
-        (col("j") + col("o._2")).as("cj"),
-        col("size"),
-        (abs(col("o._1")) <= 1 && abs(col("o._2")) <= 1).as("in3"))
-      .groupBy("ci", "cj")
-      .agg(
-        sum(when(col("in3"), col("size"))).as("n3"),
-        sum(col("size")).as("n7"))
-    cells
-      .join(contrib, cells("i") === contrib("ci") && cells("j") === contrib("cj"))
-      .select(col("i"), col("j"), col("size"),
-        // the cell itself is always inside its own 3x3, so n3 is never null
-        col("n3").cast("long").as("n3"), col("n7").cast("long").as("n7"))
+    * Each cell row goes to its block of [[BlockHalo.Side]]² cells and to
+    * the neighbour blocks whose 3-cell halo covers it ([[BlockHalo]]); ONE
+    * hash exchange on the two block-index columns co-locates a block with
+    * its halo, and the kernel fills a (Side+6)² array with the block's cell
+    * sizes and answers each own cell's 7x7 window (the 3x3 inside it) with
+    * 49 reads. That state is bounded per block at any scale, and the cell
+    * index is never packed, so it keeps its full 64-bit range. */
+  private def neighborhoods(cells: DataFrame): DataFrame = {
+    val spark = cells.sparkSession
+    import spark.implicits._
+    val halo = 3
+    val w = BlockHalo.width(halo)
+    BlockHalo.route(cells, col("i"), col("j"), halo)
+      .select(col("blk_i"), col("blk_j"), col("loc"), col("size").cast("long"))
+      .repartition(col("blk_i"), col("blk_j"))
+      .as[(java.lang.Long, java.lang.Long, Int, Long)]
+      .mapPartitions { it =>
+        // per block: its rows' locs and sizes
+        val blocks = mutable.HashMap.empty[(Long, Long),
+          (mutable.ArrayBuilder[Int], mutable.ArrayBuilder[Long])]
+        val unkeyed = mutable.ArrayBuilder.make[Long]
+        it.foreach { case (bi, bj, loc, size) =>
+          if (bi == null || bj == null) unkeyed += size
+          else {
+            val (l, s) = blocks.getOrElseUpdate((bi.longValue, bj.longValue),
+              (mutable.ArrayBuilder.make[Int], mutable.ArrayBuilder.make[Long]))
+            l += loc; s += size
+          }
+        }
+        val none: java.lang.Long = null
+        val grid = new Array[Long](w * w)
+        unkeyed.result().iterator.map(s => (none, none, s, none, none)) ++
+          blocks.iterator.flatMap { case ((bi, bj), (lb, sb)) =>
+            val loc = lb.result(); val size = sb.result()
+            loc.indices.foreach(k => grid(loc(k)) += size(k))
+            val out = loc.indices.filter(k => BlockHalo.owned(loc(k), halo)).map { k =>
+              var n3 = 0L; var n7 = 0L
+              for (di <- -3 to 3; dj <- -3 to 3) {
+                val s = grid(loc(k) + di * w + dj)
+                n7 += s
+                if (math.abs(di) <= 1 && math.abs(dj) <= 1) n3 += s
+              }
+              (java.lang.Long.valueOf(BlockHalo.cell(bi, loc(k) / w - halo)),
+                java.lang.Long.valueOf(BlockHalo.cell(bj, loc(k) % w - halo)),
+                size(k), java.lang.Long.valueOf(n3), java.lang.Long.valueOf(n7))
+            }
+            loc.foreach(grid(_) = 0L)
+            out
+          }
+      }
+      .toDF("i", "j", "size", "n3", "n7")
   }
+
+  private def classify(stats: DataFrame, m: Int): DataFrame =
+    stats
+      .withColumn("sure_outlier", col("n3") <= m && col("n7") <= m)
+      .withColumn("uncertain", col("n3") <= m && col("n7") > m)
 
   /** Cell stats + sure/uncertain classification (P5/P6,
     * `big_data_computing_1.py:101-103`). */
   def classifiedCells(points: DataFrame, d: Double, m: Int): DataFrame =
-    neighborStats(cellCounts(points, d), m)
-      .withColumn("sure_outlier", col("n3") <= m && col("n7") <= m)
-      .withColumn("uncertain", col("n3") <= m && col("n7") > m)
+    classify(neighborStats(cellCounts(points, d), m), m)
 
   /** Single-row summary (`big_data_computing_1.py:109-111` A4): total points,
     * points in sure-outlier cells, points in uncertain cells. One distributed
-    * pass, vs the reference's two collect()s + driver sums. */
-  def summary(points: DataFrame, d: Double, m: Int): DataFrame = {
-    val stats = classifiedCells(points, d, m).agg(
+    * pass, vs the reference's two collect()s + driver sums: n_points is the
+    * size sum over every cell group, the null-coordinate group included (the
+    * oracle's COUNT(*)), which classifies as neither. */
+  def summary(points: DataFrame, d: Double, m: Int): DataFrame =
+    classify(neighborhoods(cellCounts(points, d)), m).agg(
+      coalesce(sum(col("size")), lit(0L)).as("n_points"),
       coalesce(sum(when(col("sure_outlier"), col("size"))), lit(0L)).as("sure_outliers"),
       coalesce(sum(when(col("uncertain"), col("size"))), lit(0L)).as("uncertain_points"))
-    points.agg(count(lit(1)).as("n_points")).crossJoin(stats)
-  }
 
   /** K smallest non-empty cells (`big_data_computing_1.py:112-114` T2), with
     * the (size, i, j) tie-break made explicit and deterministic — the

@@ -66,4 +66,57 @@ class GridOutliersSpec extends AnyFunSuite with SharedSpark {
     assert(got == brute)
     assert(got.values.forall(_ >= 1), "ball includes the point itself")
   }
+
+  test("a null coordinate counts in n_points but has no cell stats and no ball") {
+    val d = 2.0; val m = 3
+    val withNull = (pts.map { case (id, x, y) => (id, Option(x), y) } :+ ((999L, None, 1.0)))
+      .toDF("id", "x", "y")
+    val base = GridOutliers.summary(df, d, m).head()
+    val row = GridOutliers.summary(withNull, d, m).head()
+    assert(row.getLong(0) == pts.length + 1, "n_points is the oracle's COUNT(*)")
+    assert(row.getLong(1) == base.getLong(1) && row.getLong(2) == base.getLong(2))
+    val stats = GridOutliers.neighborStats(GridOutliers.cellCounts(withNull, d), m)
+    assert(stats.filter(col("i").isNull || col("j").isNull).count() == 0)
+    assert(stats.count() == GridOutliers.cellCounts(df, d).count())
+    val balls = ExactOutliers.ballCounts(withNull, d).select("id").as[Long].collect()
+    assert(!balls.contains(999L))
+    assert(balls.length == pts.length)
+  }
+
+  test("neighborStats and summary have no 32-bit cell-index limit") {
+    // cells 2^32 apart on i share their low 32 bits: packing (i, j) into one
+    // long would merge them; ±2^40 puts the block index itself past 32 bits
+    val far = 1L << 40
+    val cells = Seq((5L, 7L, 2L), (5L + (1L << 32), 7L, 3L), (6L + (1L << 32), 8L, 1L),
+      (far, -far, 4L), (far + 3, -far - 3, 1L), (-far - 16, far + 15, 5L), (-far - 17, far + 16, 1L))
+    val got = GridOutliers.neighborStats(cells.toDF("i", "j", "size"), 3)
+      .select("i", "j", "size", "n3", "n7").as[(Long, Long, Long, Long, Long)].collect().toSet
+    assert(got == Set((5L, 7L, 2L, 2L, 2L),
+      (5L + (1L << 32), 7L, 3L, 4L, 4L), (6L + (1L << 32), 8L, 1L, 4L, 4L),
+      (far, -far, 4L, 4L, 5L), (far + 3, -far - 3, 1L, 1L, 5L),
+      (-far - 16, far + 15, 5L, 6L, 6L), (-far - 17, far + 16, 1L, 6L, 6L)))
+    // the same geometry from points: coordinates past 2^31 cells of side
+    // Λ, brute-forced on the driver with the operator's floor(x / Λ)
+    val d = 1.0; val m = 1
+    val lam = GridOutliers.lambda(d)
+    val big = Seq((1L, 3e11, -3e11), (2L, 3e11 + lam / 2, -3e11), (3L, 3e11 + 2.5 * lam, -3e11),
+      (4L, -3e11, 3e11), (5L, -3e11 + 10 * lam, 3e11), (6L, 1.0, 1.0))
+    val cellOf = big.map { case (_, x, y) => (math.floor(x / lam).toLong, math.floor(y / lam).toLong) }
+    assert(cellOf.exists(_._1 > (1L << 31)), "the fixture must exceed 32-bit cell indices")
+    val sizes = cellOf.groupMapReduce(identity)(_ => 1L)(_ + _)
+    def window(c: (Long, Long), r: Int) =
+      (for (di <- -r to r; dj <- -r to r) yield sizes.getOrElse((c._1 + di, c._2 + dj), 0L)).sum
+    val sure = sizes.collect { case (c, s) if window(c, 1) <= m && window(c, 3) <= m => s }.sum
+    val unc = sizes.collect { case (c, s) if window(c, 1) <= m && window(c, 3) > m => s }.sum
+    val row = GridOutliers.summary(big.toDF("id", "x", "y"), d, m).head()
+    assert((row.getLong(0), row.getLong(1), row.getLong(2)) == ((big.length.toLong, sure, unc)))
+    assert(sure > 0 && unc > 0, "the fixture must classify both ways")
+  }
+
+  test("ballCounts fails loudly past 32-bit cell indices") {
+    val pts = Seq((1L, 3.0e9, 0.0), (2L, 0.0, 0.0)).toDF("id", "x", "y")
+    val e = intercept[Exception](ExactOutliers.ballCounts(pts, 1.0).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(msgs.exists(m => m != null && m.contains("cell index exceeds 32 bits")), e.toString)
+  }
 }

@@ -26,7 +26,7 @@ class PlanPostureSpec extends AnyFunSuite with SharedSpark {
   /** Nested-loop joins that are deliberate and bounded: ANN scoring
     * crossJoins against an explicitly broadcast tiny side (query vectors /
     * coarse centroids); summary queries combine two SINGLE-ROW aggregates
-    * (n_points x classified-cell sums, semi x anti counts) — a 1x1 join by
+    * (semi x anti counts, n_true x n_found) — a 1x1 join by
     * construction. Every other query must stay free of nested-loop pair
     * spaces. */
   private val deliberateNestedLoop = Set("q_ann_topk", "q_ann_ivf",
@@ -49,7 +49,7 @@ class PlanPostureSpec extends AnyFunSuite with SharedSpark {
     "q_pq_adc", // ADC scan x the broadcast 5-row query side
     "q_pq_recall", // exact-L2 ground-truth side of the PQ recall measure
     "q_ivfpq_recall", // brute-force ground-truth side of the composed-index recall
-    "q_neardup_blocked", "q_semi_anti", "q_outlier_summary", "q_hw2_pipeline",
+    "q_neardup_blocked", "q_semi_anti",
     "q_hll_users", // n_exact x (s, v_zero): two SINGLE-ROW aggregates
     "q_mixture", // |langs| rates x the SINGLE-ROW quantized-weight total
     "q_bigram_lift", // SINGLE-ROW unigram/bigram totals x the pair counts
@@ -98,6 +98,13 @@ class PlanPostureSpec extends AnyFunSuite with SharedSpark {
       val plan = planOf(name)
       assert(!plan.contains("BroadcastNestedLoopJoin"),
         s"$name plans an unexpected nested-loop join:\n$plan")
+    }
+  }
+
+  test("the HW1 outlier counts plan no broadcast exchange") {
+    for (name <- Seq("q_exact_outlier_count", "q_outlier_summary")) {
+      val plan = planOf(name)
+      assert(!plan.contains("BroadcastExchange"), s"$name plans a broadcast:\n$plan")
     }
   }
 

@@ -96,6 +96,66 @@ class PropertySpec extends AnyFunSuite with SharedSpark {
     }
   }
 
+  // both HW1 kernels group cells into 16x16 blocks with a halo ring; the
+  // block-edge fixtures crowd the block edges (exact multiples included) in
+  // all four quadrants, spanning at least three blocks per axis
+  private val side = 16
+
+  test("block-edge property: capped and uncapped ball counts equal brute force") {
+    val rng = new scala.util.Random(16161)
+    def edgeCoord(unit: Double): Double =
+      if (rng.nextBoolean()) (rng.nextInt(9) - 4) * side * unit
+      else if (rng.nextBoolean()) {
+        val e = (rng.nextInt(9) - 4) * side * unit
+        Seq(e - unit, e + unit, e - rng.nextDouble() * 1.5 * unit,
+          e + rng.nextDouble() * 1.5 * unit)(rng.nextInt(4))
+      } else (rng.nextDouble() * 9 - 4.5) * side * unit
+    for (d <- List(1.0, 0.5)) {
+      val m = 3
+      val pts = List.fill(500)((edgeCoord(d), edgeCoord(d)))
+      // ids repeat for every 7th point: the ball count of an id is the sum
+      // over its points, as the oracle's GROUP BY id
+      val rows = pts.zipWithIndex.map { case ((x, y), i) =>
+        ((if (i % 7 == 0) i / 7 else i).toLong, x, y) }
+      val df = rows.toDF("id", "x", "y")
+      val brute = rows.groupMapReduce(_._1) { case (_, x, y) =>
+        pts.count { case (x2, y2) => (x - x2) * (x - x2) + (y - y2) * (y - y2) <= d * d }.toLong
+      }(_ + _)
+      val full = ExactOutliers.ballCounts(df, d)
+        .select("id", "ball_size").as[(Long, Long)].collect().toMap
+      val wrong = brute.filter { case (id, b) => !full.get(id).contains(b) }
+      val sameIds = full.keySet == brute.keySet
+      assert(sameIds && wrong.isEmpty, s"uncapped ball counts diverged at d=$d: " +
+        wrong.take(5).map { case (id, b) => s"id $id: ${full.get(id)} vs $b" })
+      val capped = ExactOutliers.ballCounts(df, d, capAbove = Some(m))
+        .select("id", "ball_size").as[(Long, Long)].collect().toMap
+      assert(capped.keySet == brute.keySet)
+      brute.foreach { case (id, b) =>
+        if (b <= m) assert(capped(id) == b, s"capped id $id: ${capped(id)} vs $b (d=$d)")
+        else assert(capped(id) > m, s"capped id $id fell to ${capped(id)} <= $m (d=$d)")
+      }
+    }
+  }
+
+  test("block-edge property: N3/N7 equal brute force over the cell table") {
+    val rng = new scala.util.Random(16162)
+    def edgeCell(): Long = {
+      val e = (rng.nextInt(9) - 4) * side.toLong
+      if (rng.nextInt(3) == 0) e + rng.nextInt(9) - 4 else e + rng.nextInt(side)
+    }
+    val cells = List.fill(900)((edgeCell(), edgeCell())).distinct
+      .map { case (i, j) => (i, j, 1L + rng.nextInt(5)) }
+    val size = cells.map { case (i, j, s) => (i, j) -> s }.toMap
+    def window(i: Long, j: Long, r: Int): Long =
+      (for (di <- -r to r; dj <- -r to r) yield size.getOrElse((i + di, j + dj), 0L)).sum
+    val want = cells.map { case (i, j, s) => (i, j, s, window(i, j, 1), window(i, j, 3)) }.toSet
+    val got = GridOutliers.neighborStats(cells.toDF("i", "j", "size"), 3)
+      .select("i", "j", "size", "n3", "n7").as[(Long, Long, Long, Long, Long)].collect()
+    val wrong = got.toSet diff want
+    val sameCount = got.length == cells.length
+    assert(sameCount && wrong.isEmpty, s"N3/N7 diverged: ${wrong.take(5)}")
+  }
+
   test("grid containment holds on random point sets (sure ⊆ exact ⊆ sure ∪ uncertain)") {
     val rng = new scala.util.Random(4242)
     for (d <- List(1.0, 2.0, 3.0, 1.5, 2.5)) {
