@@ -33,16 +33,17 @@ object ExactOutliers {
     * [[BlockHalo]]), ONE hash exchange on the block co-locates a block's
     * points with its halo, and a per-partition kernel counts `dist² ≤ D²`
     * matches in tight loops over primitive double arrays. Inside a block the
-    * points are counting-sorted by cell, so a resident's 3x3 window is three
-    * contiguous runs. The n·E[ball] candidate pairs (104M at sf0.1) exist
-    * only as loop iterations inside the kernel, never as materialized rows —
-    * the genuine per-partition-imperative case; it benched ~4x faster than
-    * the equivalent equi-join + 104M-row filter/aggregate plan. AQE can't
+    * points are counting-sorted by cell, so a cell's 3x3 window is three
+    * contiguous runs, copied once into the arrays its residents scan. The
+    * n·E[ball] candidate pairs (104M at sf0.1) exist only as loop
+    * iterations inside the kernel, never as materialized rows — the genuine
+    * per-partition-imperative case; it benched ~4x faster than the
+    * equivalent equi-join + 104M-row filter/aggregate plan. AQE can't
     * rebalance a skewed block here, but a block's work is bounded by
     * geometry (≤ |block|·|3x3 occupancy|) and blocks hash-spread across
     * partitions. Measured under DELIBERATE skew (`graft.SkewProof`, one
     * 100k-point hot cell = 1e10 intra-cell pairs, 4 vCPUs, BASELINE.md):
-    * kernel 26 s / 23 s max task (that one cell's loop) vs
+    * kernel 19 s / 16 s max task (that one cell's loop) vs
     * [[ballCountsJoin]] 266 s / 199 s max task — AQE skew-join never fires
     * because its detection is INPUT-bytes based (the hot partition is ~4 MB,
     * far under the 256 MB threshold) while the blow-up is join OUTPUT; even
@@ -107,58 +108,88 @@ object ExactOutliers {
           val loc = scala.collection.mutable.ArrayBuilder.make[Int]
           val x = scala.collection.mutable.ArrayBuilder.make[Double]
           val y = scala.collection.mutable.ArrayBuilder.make[Double]
-          val rid = scala.collection.mutable.ArrayBuilder.make[Long]
-          val rrow = scala.collection.mutable.ArrayBuilder.make[Int]
-          var n = 0
+          val id = scala.collection.mutable.ArrayBuilder.make[Long]
+          val res = scala.collection.mutable.ArrayBuilder.make[Boolean]
         }
         val blocks = new scala.collection.mutable.LongMap[Block]
         it.foreach { case (blk, loc, id, x, y) =>
           var b = blocks.getOrNull(blk)
           if (b == null) { b = new Block; blocks.update(blk, b) }
-          if (id != null && BlockHalo.owned(loc, 1)) { b.rid += id.longValue(); b.rrow += b.n }
-          b.loc += loc; b.x += x; b.y += y; b.n += 1
+          val resident = id != null && BlockHalo.owned(loc, 1)
+          b.loc += loc; b.x += x; b.y += y
+          b.id += (if (resident) id.longValue() else 0L); b.res += resident
         }
         blocks.valuesIterator.flatMap { b =>
           val loc = b.loc.result(); val x = b.x.result(); val y = b.y.result()
-          // counting sort by cell: cell c's points are sx/sy(start(c) until
-          // start(c+1)), and a window row's three cells are adjacent locs
+          val id = b.id.result(); val res = b.res.result()
+          // counting sort by cell: cell c's rows are start(c) until
+          // start(c+1), and a window row's three cells are adjacent locs
           val start = new Array[Int](w * w + 1)
           loc.foreach(c => start(c + 1) += 1)
           var c = 1
           while (c <= w * w) { start(c) += start(c - 1); c += 1 }
           val next = java.util.Arrays.copyOf(start, w * w)
           val sx = new Array[Double](loc.length); val sy = new Array[Double](loc.length)
+          val sid = new Array[Long](loc.length); val sres = new Array[Boolean](loc.length)
           var k = 0
           while (k < loc.length) {
-            val p = next(loc(k)); sx(p) = x(k); sy(p) = y(k); next(loc(k)) = p + 1
+            val p = next(loc(k)); next(loc(k)) = p + 1
+            sx(p) = x(k); sy(p) = y(k); sid(p) = id(k); sres(p) = res(k)
             k += 1
           }
-          val rid = b.rid.result(); val rrow = b.rrow.result()
-          val cnt = new Array[Long](rid.length)
-          var r = 0
-          while (r < rid.length) {
-            val row = rrow(r); val px = x(row); val py = y(row)
-            var n = 0L
-            var di = -1
-            while (di <= 1 && n < cap) {
-              val left = loc(row) + di * w - 1
-              var i = start(left); val end = start(left + 3)
-              while (i < end && n < cap) {
-                val dx = px - sx(i); val dy = py - sy(i)
-                if (dx * dx + dy * dy <= d2) n += 1L
-                i += 1
+          val outId = scala.collection.mutable.ArrayBuilder.make[Long]
+          val outCnt = scala.collection.mutable.ArrayBuilder.make[Long]
+          c = 0
+          while (c < w * w) {
+            // the cell's residents share one copy of its 3x3 window
+            var wx: Array[Double] = null; var wy: Array[Double] = null
+            k = start(c)
+            while (k < start(c + 1)) {
+              if (sres(k)) {
+                if (wx == null) { wx = window(sx, start, c, w); wy = window(sy, start, c, w) }
+                outId += sid(k); outCnt += ballCount(sx(k), sy(k), wx, wy, d2, cap)
               }
-              di += 1
+              k += 1
             }
-            cnt(r) = n
-            r += 1
+            c += 1
           }
-          rid.iterator.zip(cnt.iterator)
+          outId.result().iterator.zip(outCnt.result().iterator)
         }
       }
       .toDF("id", "cnt")
       .groupBy(col("id"))
       .agg(sum(col("cnt")).as("ball_size"))
+  }
+
+  /** The points of cell `c`'s 3x3 window in a block counting-sorted by
+    * cell (`start` as in [[ballCounts]]): three runs of three adjacent
+    * cells, copied into one array. */
+  private def window(s: Array[Double], start: Array[Int], c: Int, w: Int): Array[Double] = {
+    val out = new Array[Double]((-1 to 1).map(di => start(c + di * w + 2) - start(c + di * w - 1)).sum)
+    var o = 0
+    for (di <- -1 to 1) {
+      val from = start(c + di * w - 1); val n = start(c + di * w + 2) - from
+      System.arraycopy(s, from, out, o, n)
+      o += n
+    }
+    out
+  }
+
+  /** How many points of (wx, wy) lie within √d2 of (px, py), counting up
+    * to `cap`. A small method over whole arrays, so the JIT compiles it
+    * with its bounds checks hoisted: the same loop over sub-ranges, inlined
+    * in the kernel, made SkewProof's hot-cell task 1.4× slower
+    * (BASELINE.md). */
+  private def ballCount(px: Double, py: Double, wx: Array[Double], wy: Array[Double],
+                        d2: Double, cap: Long): Long = {
+    var n = 0L
+    var i = 0
+    while (i < wx.length && n < cap) {
+      val dx = px - wx(i); val dy = py - wy(i)
+      if (dx * dx + dy * dy <= d2) n += 1L
+      i += 1
+    }
+    n
   }
 
   /** Equi-join form of [[ballCounts]] — the AQE-skew-eligible alternative
