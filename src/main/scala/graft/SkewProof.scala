@@ -14,7 +14,10 @@ import graft.operators.ExactOutliers
   * Fixture: the organic sf0.1 point table (60k points, ~26k occupied
   * cells) plus `SPARK_GRAFT_HOT` points (default 100k) packed into ONE
   * D-cell — a hot cell whose ~1e10 intra-cell pair evaluations dominate
-  * the total. Both forms run with AQE on; per-task wall times are
+  * the total. The join form buckets on that D-cell; the kernel sees it as
+  * 3x3 Λ-cells of one block, whose residents all scan the same 100k-point
+  * window, so both forms evaluate the same pairs. Both forms run with AQE
+  * on; per-task wall times are
   * listener-collected so the output shows the straggler directly
   * (task_max vs task_p50). The two forms must agree bit-for-bit on every
   * ball count — the A/B is only honest if it computes the same answer.

@@ -1,7 +1,5 @@
 package graft.operators
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -18,9 +16,9 @@ import org.apache.spark.sql.functions._
   * neighborhood sums (`big_data_computing_1.py:87,91-96`) is replaced by a
   * block-halo kernel (SURVEY.md §2.3 J2): the cell table is routed to blocks
   * of cells with a 3-cell halo and each block answers its own cells'
-  * windows from an array. Fully distributed, no point-scale data ever crosses to the
-  * driver, and the plan survives a 100x scale-up where the collected map
-  * would OOM the driver.
+  * windows from a prefix sum over its cells. Fully distributed, no
+  * point-scale data ever crosses to the driver, and the plan survives a
+  * 100x scale-up where the collected map would OOM the driver.
   */
 object GridOutliers {
 
@@ -55,54 +53,32 @@ object GridOutliers {
     * same pass.
     *
     * Each cell row goes to its block of [[BlockHalo.Side]]² cells and to
-    * the neighbour blocks whose 3-cell halo covers it ([[BlockHalo]]); ONE
+    * the neighbour blocks whose 3-cell ring covers it ([[BlockHalo]]); ONE
     * hash exchange on the two block-index columns co-locates a block with
-    * its halo, and the kernel fills a (Side+6)² array with the block's cell
-    * sizes and answers each own cell's 7x7 window (the 3x3 inside it) with
-    * 49 reads. That state is bounded per block at any scale, and the cell
-    * index is never packed, so it keeps its full 64-bit range. */
+    * its ring, and each own cell reads N3 and N7 as 3 and 7 range sums of
+    * the block's size prefix over the cells. That state is bounded per
+    * block at any scale, and the cell index is never packed, so it keeps
+    * its full 64-bit range. */
   private def neighborhoods(cells: DataFrame): DataFrame = {
     val spark = cells.sparkSession
     import spark.implicits._
-    val halo = 3
-    val w = BlockHalo.width(halo)
-    BlockHalo.route(cells, col("i"), col("j"), halo)
+    BlockHalo.route(cells, col("i"), col("j"))
       .select(col("blk_i"), col("blk_j"), col("loc"), col("size").cast("long"))
       .repartition(col("blk_i"), col("blk_j"))
       .as[(java.lang.Long, java.lang.Long, Int, Long)]
       .mapPartitions { it =>
-        // per block: its rows' locs and sizes
-        val blocks = mutable.HashMap.empty[(Long, Long),
-          (mutable.ArrayBuilder[Int], mutable.ArrayBuilder[Long])]
-        val unkeyed = mutable.ArrayBuilder.make[Long]
-        it.foreach { case (bi, bj, loc, size) =>
-          if (bi == null || bj == null) unkeyed += size
-          else {
-            val (l, s) = blocks.getOrElseUpdate((bi.longValue, bj.longValue),
-              (mutable.ArrayBuilder.make[Int], mutable.ArrayBuilder.make[Long]))
-            l += loc; s += size
-          }
-        }
         val none: java.lang.Long = null
-        val grid = new Array[Long](w * w)
-        unkeyed.result().iterator.map(s => (none, none, s, none, none)) ++
-          blocks.iterator.flatMap { case ((bi, bj), (lb, sb)) =>
-            val loc = lb.result(); val size = sb.result()
-            loc.indices.foreach(k => grid(loc(k)) += size(k))
-            val out = loc.indices.filter(k => BlockHalo.owned(loc(k), halo)).map { k =>
-              var n3 = 0L; var n7 = 0L
-              for (di <- -3 to 3; dj <- -3 to 3) {
-                val s = grid(loc(k) + di * w + dj)
-                n7 += s
-                if (math.abs(di) <= 1 && math.abs(dj) <= 1) n3 += s
+        val (unkeyed, keyed) = it.toArray.partition(r => r._1 == null || r._2 == null)
+        unkeyed.iterator.map(r => (none, none, r._4, none, none)) ++
+          BlockHalo.assemble(keyed.iterator)(r => (r._1.longValue, r._2.longValue), _._3, _._4)
+            .flatMap { b =>
+              b.rows.iterator.filter(r => BlockHalo.owned(r._3)).map { case (_, _, loc, size) =>
+                (java.lang.Long.valueOf(BlockHalo.cell(b.blkI, loc / BlockHalo.Width - BlockHalo.Halo)),
+                  java.lang.Long.valueOf(BlockHalo.cell(b.blkJ, loc % BlockHalo.Width - BlockHalo.Halo)),
+                  size, java.lang.Long.valueOf(BlockHalo.windowSum(b.prefix, loc, 1)),
+                  java.lang.Long.valueOf(BlockHalo.windowSum(b.prefix, loc, 3)))
               }
-              (java.lang.Long.valueOf(BlockHalo.cell(bi, loc(k) / w - halo)),
-                java.lang.Long.valueOf(BlockHalo.cell(bj, loc(k) % w - halo)),
-                size(k), java.lang.Long.valueOf(n3), java.lang.Long.valueOf(n7))
             }
-            loc.foreach(grid(_) = 0L)
-            out
-          }
       }
       .toDF("i", "j", "size", "n3", "n7")
   }

@@ -14,9 +14,10 @@ import graft.sources.Sources
   * with rows in buckets {k-1, k, k+1}, so probing those three buckets turns
   * the band predicate into an equi-join on (key, bucket) — shuffled hash
   * join, pair fan-out bounded by the actual band density, the same trick the
-  * outlier grid plays in 2-D space ([[ExactOutliers]]). Each unordered pair
-  * is matched exactly once: the probe covers the build row's bucket exactly
-  * once, and the `idA < idB` predicate de-duplicates the direction. */
+  * outlier grid plays in 2-D space ([[ExactOutliers.ballCountsJoin]]). Each
+  * unordered pair is matched exactly once: the probe covers the build row's
+  * bucket exactly once, and the `idA < idB` predicate de-duplicates the
+  * direction. */
 object IntervalJoin {
 
   /** Pairs of rows (key, t, rowId) with |t_b - t_a| <= delta and

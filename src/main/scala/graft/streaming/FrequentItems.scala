@@ -28,12 +28,18 @@ import graft.model.StreamParams
   */
 object FrequentItems {
 
+  /** The first n stream items in `seq` order. `limit` takes an Int, so a
+    * larger n is refused rather than truncated to its low 32 bits. */
+  private def firstN(items: DataFrame, n: Long): DataFrame = {
+    require(n <= Int.MaxValue, s"prefix length n=$n exceeds limit()'s Int range")
+    items.orderBy("seq").limit(n.toInt)
+  }
+
   /** Exact frequent items (C7, `big_data_computing_3.py:10-12`): items whose
     * count over the first n stream items is ≥ φ·n. Streaming-exact counts are
     * the same groupBy under `outputMode(update)`. */
   def exactFrequent(items: DataFrame, n: Long, phi: Double): DataFrame = {
-    require(n <= Int.MaxValue, s"prefix length n=$n exceeds limit()'s Int range")
-    items.orderBy("seq").limit(n.toInt)
+    firstN(items, n)
       .groupBy("item").agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= lit(phi) * lit(n.toDouble))
       .orderBy("item")
@@ -42,11 +48,11 @@ object FrequentItems {
   /** ±-marked membership comparison (§2.7, `big_data_computing_3.py:125-137`):
     * left join of a candidate set against the true-frequent set. */
   def compareReport(items: DataFrame, n: Long, phi: Double, eps: Double): DataFrame = {
-    val firstN = items.orderBy("seq").limit(n.toInt)
+    val counts = firstN(items, n)
       .groupBy("item").agg(count(lit(1)).as("cnt"))
-    val estimates = firstN.filter(col("cnt") >= lit(phi - eps) * lit(n.toDouble))
+    val estimates = counts.filter(col("cnt") >= lit(phi - eps) * lit(n.toDouble))
       .select(col("item"), col("cnt").as("est_cnt"))
-    val truth = firstN.filter(col("cnt") >= lit(phi) * lit(n.toDouble))
+    val truth = counts.filter(col("cnt") >= lit(phi) * lit(n.toDouble))
       .select(col("item").as("t_item"))
     estimates.join(truth, estimates("item") === truth("t_item"), "left")
       .select(col("item"), col("est_cnt"),
@@ -62,15 +68,13 @@ object FrequentItems {
     * operator expressible as joins+aggregations (hence oracle-checkable).
     * Report filter: count > (φ−ε)·n (`:110`). */
   def stickyDeterministic(items: DataFrame, p: StreamParams): DataFrame = {
-    require(p.n <= Int.MaxValue,
-      s"prefix length n=${p.n} exceeds limit()'s Int range")
-    val firstN = items.orderBy("seq").limit(p.n.toInt)
+    val prefix = firstN(items, p.n)
     val thr = lit(p.stickyRate / p.n) * lit(1152921504606846976.0) // 2^60
-    val coins = firstN.withColumn("h",
+    val coins = prefix.withColumn("h",
       conv(substring(md5(col("seq").cast("string")), 1, 15), 16, 10).cast("long"))
     val admitted = coins.filter(col("h") < thr)
       .groupBy(col("item").as("a_item")).agg(min(col("seq")).as("s0"))
-    firstN.join(admitted, col("item") === col("a_item") && col("seq") >= col("s0"))
+    prefix.join(admitted, col("item") === col("a_item") && col("seq") >= col("s0"))
       .groupBy("item").agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") > lit(p.phi - p.eps) * lit(p.n.toDouble))
       .orderBy("item")
@@ -83,7 +87,7 @@ object FrequentItems {
   def reservoirEstimate(items: DataFrame, p: StreamParams, seed: Long): DataFrame = {
     val spark = items.sparkSession
     import spark.implicits._
-    val seq = items.orderBy("seq").limit(p.n.toInt).select("item").as[Long].collect()
+    val seq = firstN(items, p.n).select("item").as[Long].collect()
     val st = new SamplerState(p, seed)
     st.fold(seq)
     st.reservoir.distinct.sorted.toSeq.toDF("item")

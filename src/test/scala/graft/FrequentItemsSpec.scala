@@ -166,4 +166,21 @@ class FrequentItemsSpec extends AnyFunSuite with SharedSpark {
       assert(mark == (if (cnt >= p.phi * p.n) "+" else "-"))
     }
   }
+
+  test("a prefix length past limit()'s Int range is refused, not truncated") {
+    // 2^32 + 5 truncates to 5: without the check each function would read
+    // only the first five items
+    val n = (1L << 32) + 5
+    val df = stream.toDF("seq", "item")
+    val big = p.copy(n = n)
+    val calls: Seq[(String, () => Any)] = Seq(
+      "exactFrequent" -> (() => FrequentItems.exactFrequent(df, n, p.phi)),
+      "compareReport" -> (() => FrequentItems.compareReport(df, n, p.phi, p.eps)),
+      "stickyDeterministic" -> (() => FrequentItems.stickyDeterministic(df, big)),
+      "reservoirEstimate" -> (() => FrequentItems.reservoirEstimate(df, big, seed = 1L)))
+    calls.foreach { case (name, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(n.toString), s"$name: ${e.getMessage}")
+    }
+  }
 }

@@ -88,13 +88,13 @@ class GridOutliersSpec extends AnyFunSuite with SharedSpark {
     // long would merge them; ±2^40 puts the block index itself past 32 bits
     val far = 1L << 40
     val cells = Seq((5L, 7L, 2L), (5L + (1L << 32), 7L, 3L), (6L + (1L << 32), 8L, 1L),
-      (far, -far, 4L), (far + 3, -far - 3, 1L), (-far - 16, far + 15, 5L), (-far - 17, far + 16, 1L))
+      (far, -far, 4L), (far + 3, -far - 3, 1L), (-far - 64, far + 63, 5L), (-far - 65, far + 64, 1L))
     val got = GridOutliers.neighborStats(cells.toDF("i", "j", "size"), 3)
       .select("i", "j", "size", "n3", "n7").as[(Long, Long, Long, Long, Long)].collect().toSet
     assert(got == Set((5L, 7L, 2L, 2L, 2L),
       (5L + (1L << 32), 7L, 3L, 4L, 4L), (6L + (1L << 32), 8L, 1L, 4L, 4L),
       (far, -far, 4L, 4L, 5L), (far + 3, -far - 3, 1L, 1L, 5L),
-      (-far - 16, far + 15, 5L, 6L, 6L), (-far - 17, far + 16, 1L, 6L, 6L)))
+      (-far - 64, far + 63, 5L, 6L, 6L), (-far - 65, far + 64, 1L, 6L, 6L)))
     // the same geometry from points: coordinates past 2^31 cells of side
     // Λ, brute-forced on the driver with the operator's floor(x / Λ)
     val d = 1.0; val m = 1
@@ -111,12 +111,10 @@ class GridOutliersSpec extends AnyFunSuite with SharedSpark {
     val row = GridOutliers.summary(big.toDF("id", "x", "y"), d, m).head()
     assert((row.getLong(0), row.getLong(1), row.getLong(2)) == ((big.length.toLong, sure, unc)))
     assert(sure > 0 && unc > 0, "the fixture must classify both ways")
-  }
-
-  test("ballCounts fails loudly past 32-bit cell indices") {
-    val pts = Seq((1L, 3.0e9, 0.0), (2L, 0.0, 0.0)).toDF("id", "x", "y")
-    val e = intercept[Exception](ExactOutliers.ballCounts(pts, 1.0).collect())
-    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
-    assert(msgs.exists(m => m != null && m.contains("cell index exceeds 32 bits")), e.toString)
+    val balls = big.map { case (id, x, y) =>
+      id -> big.count { case (_, x2, y2) => (x - x2) * (x - x2) + (y - y2) * (y - y2) <= d * d }.toLong
+    }.toMap
+    assert(ExactOutliers.ballCounts(big.toDF("id", "x", "y"), d).as[(Long, Long)].collect().toMap == balls)
+    assert(balls.values.exists(_ > 1), "the fixture must hold a pair within D")
   }
 }

@@ -96,44 +96,86 @@ class PropertySpec extends AnyFunSuite with SharedSpark {
     }
   }
 
-  // both HW1 kernels group cells into 16x16 blocks with a halo ring; the
-  // block-edge fixtures crowd the block edges (exact multiples included) in
-  // all four quadrants, spanning at least three blocks per axis
-  private val side = 16
+  // both HW1 kernels group Λ-cells into 64x64 blocks with a 3-cell ring;
+  // the block-edge fixtures crowd the block edges (exact multiples
+  // included) in all four quadrants, spanning at least three blocks per axis
+  private val side = 64
+
+  /** Capped and uncapped ball counts of `rows` against brute force with the
+    * oracle's expression; a row with a null x has no ball and is in none. */
+  private def assertBallCounts(rows: Seq[(Long, Option[Double], Double)], d: Double, m: Int): Unit = {
+    val df = rows.toDF("id", "x", "y")
+    val pts = rows.collect { case (_, Some(x), y) => (x, y) }
+    val brute = rows.collect { case (id, Some(x), y) => (id, x, y) }.groupMapReduce(_._1) {
+      case (_, x, y) =>
+        pts.count { case (x2, y2) => (x - x2) * (x - x2) + (y - y2) * (y - y2) <= d * d }.toLong
+    }(_ + _)
+    val full = ExactOutliers.ballCounts(df, d)
+      .select("id", "ball_size").as[(Long, Long)].collect().toMap
+    val wrong = brute.filter { case (id, b) => !full.get(id).contains(b) }
+    val sameIds = full.keySet == brute.keySet
+    assert(sameIds && wrong.isEmpty, s"uncapped ball counts diverged at d=$d: " +
+      wrong.take(5).map { case (id, b) => s"id $id: ${full.get(id)} vs $b" })
+    val capped = ExactOutliers.ballCounts(df, d, capAbove = Some(m))
+      .select("id", "ball_size").as[(Long, Long)].collect().toMap
+    assert(capped.keySet == brute.keySet)
+    brute.foreach { case (id, b) =>
+      if (b <= m) assert(capped(id) == b, s"capped id $id: ${capped(id)} vs $b (d=$d)")
+      else assert(capped(id) > m, s"capped id $id fell to ${capped(id)} <= $m (d=$d)")
+    }
+  }
+
+  /** Every 7th point repeats an id: the ball count of an id is the sum over
+    * its points, as the oracle's GROUP BY id. */
+  private def withIds(pts: Seq[(Option[Double], Double)]): Seq[(Long, Option[Double], Double)] =
+    pts.zipWithIndex.map { case ((x, y), i) => ((if (i % 7 == 0) i / 7 else i).toLong, x, y) }
 
   test("block-edge property: capped and uncapped ball counts equal brute force") {
+    // edges at multiples of 16·D: the 16-cell blocks of D-cells that the
+    // ball counts routed on before they moved onto the Λ-grid
     val rng = new scala.util.Random(16161)
     def edgeCoord(unit: Double): Double =
-      if (rng.nextBoolean()) (rng.nextInt(9) - 4) * side * unit
+      if (rng.nextBoolean()) (rng.nextInt(9) - 4) * 16 * unit
       else if (rng.nextBoolean()) {
-        val e = (rng.nextInt(9) - 4) * side * unit
+        val e = (rng.nextInt(9) - 4) * 16 * unit
         Seq(e - unit, e + unit, e - rng.nextDouble() * 1.5 * unit,
           e + rng.nextDouble() * 1.5 * unit)(rng.nextInt(4))
-      } else (rng.nextDouble() * 9 - 4.5) * side * unit
-    for (d <- List(1.0, 0.5)) {
-      val m = 3
-      val pts = List.fill(500)((edgeCoord(d), edgeCoord(d)))
-      // ids repeat for every 7th point: the ball count of an id is the sum
-      // over its points, as the oracle's GROUP BY id
-      val rows = pts.zipWithIndex.map { case ((x, y), i) =>
-        ((if (i % 7 == 0) i / 7 else i).toLong, x, y) }
-      val df = rows.toDF("id", "x", "y")
-      val brute = rows.groupMapReduce(_._1) { case (_, x, y) =>
-        pts.count { case (x2, y2) => (x - x2) * (x - x2) + (y - y2) * (y - y2) <= d * d }.toLong
-      }(_ + _)
-      val full = ExactOutliers.ballCounts(df, d)
-        .select("id", "ball_size").as[(Long, Long)].collect().toMap
-      val wrong = brute.filter { case (id, b) => !full.get(id).contains(b) }
-      val sameIds = full.keySet == brute.keySet
-      assert(sameIds && wrong.isEmpty, s"uncapped ball counts diverged at d=$d: " +
-        wrong.take(5).map { case (id, b) => s"id $id: ${full.get(id)} vs $b" })
-      val capped = ExactOutliers.ballCounts(df, d, capAbove = Some(m))
-        .select("id", "ball_size").as[(Long, Long)].collect().toMap
-      assert(capped.keySet == brute.keySet)
-      brute.foreach { case (id, b) =>
-        if (b <= m) assert(capped(id) == b, s"capped id $id: ${capped(id)} vs $b (d=$d)")
-        else assert(capped(id) > m, s"capped id $id fell to ${capped(id)} <= $m (d=$d)")
+      } else (rng.nextDouble() * 9 - 4.5) * 16 * unit
+    for (d <- List(1.0, 0.5))
+      assertBallCounts(withIds(List.fill(500)((Some(edgeCoord(d)), edgeCoord(d)))), d, 3)
+  }
+
+  test("Λ-geometry property: capped and uncapped ball counts equal brute force") {
+    // a D whose Λ = d / (2√2) rounds up, so a point's Λ-cell index can
+    // fall one below its exact-arithmetic cell
+    def roundsUp(d: Double): Boolean = {
+      val mc = new java.math.MathContext(60)
+      val exact = new java.math.BigDecimal(d).divide(java.math.BigDecimal.valueOf(8).sqrt(mc), mc)
+      new java.math.BigDecimal(GridOutliers.lambda(d)).compareTo(exact) > 0
+    }
+    val dUp = Iterator.from(1).map(k => 0.5 + k / 1024.0).find(roundsUp).get
+    val rng = new scala.util.Random(16163)
+    for (d <- List(1.0, dUp)) {
+      val lam = GridOutliers.lambda(d)
+      // Λ-block edges (multiples of 16Λ) in all four quadrants, nine blocks
+      // per axis, with points on, one cell off and up to 3Λ off the edge
+      def edge(): Double = {
+        val e = (rng.nextInt(9) - 4) * side * lam
+        Seq(e, e - lam, e + lam, e - rng.nextDouble() * 3 * lam,
+          e + rng.nextDouble() * 3 * lam)(rng.nextInt(5))
       }
+      // lattice pairs exactly D apart on an axis, around the block corner
+      // at the origin, in all four quadrants
+      val lattice = for (a <- -7 to 7; b <- -7 to 7) yield (a * d, b * d)
+      // partners of edge points: exactly D apart on an axis and on a 3-4-5
+      // diagonal, and 3Λ = 1.06·D apart on an axis and on a diagonal
+      val offsets = Seq((d, 0.0), (0.0, -d), (0.6 * d, 0.8 * d), (-0.8 * d, 0.6 * d),
+        (3 * lam, 0.0), (0.0, -3 * lam), (3 * lam, 3 * lam))
+      val bases = List.fill(150)((edge(), edge()))
+      val partners = bases.map { case (x, y) =>
+        val (dx, dy) = offsets(rng.nextInt(offsets.size)); (x + dx, y + dy) }
+      val pts = (lattice ++ bases ++ partners).map { case (x, y) => (Option(x), y) }
+      assertBallCounts(withIds(pts) :+ ((-1L, None, 0.0)), d, 3)
     }
   }
 
