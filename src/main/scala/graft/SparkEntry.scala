@@ -127,7 +127,7 @@ object SparkEntry {
       GridOutliers.cellCounts(Sources.points2dCentered(s, dir), D).orderBy("i", "j")),
     "q_cell_stats" -> ((s, dir) =>
       GridOutliers.neighborStats(
-        GridOutliers.cellCounts(Sources.points2d(s, dir), D), M).orderBy("i", "j")),
+        GridOutliers.cellCounts(Sources.points2d(s, dir), D)).orderBy("i", "j")),
     "q_outlier_summary" -> ((s, dir) =>
       GridOutliers.summary(Sources.points2d(s, dir), D, M)),
     "q_topk_cells" -> ((s, dir) =>

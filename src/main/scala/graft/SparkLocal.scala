@@ -55,7 +55,11 @@ object SparkLocal {
     s.sparkContext.setLogLevel("WARN")
     s
   }
-  def localDir: String = {
+  /** Sweeps stale dirs once per JVM, at first use: a sweep on every call
+    * would let a JVM older than the cutoff delete its own live dirs (the
+    * JVM-long audit checkpoint, or Spark's `blockmgr-*` dir, whose
+    * top-level mtime stops changing once its subdirs exist). */
+  lazy val localDir: String = {
     val shm = new java.io.File("/dev/shm/graft-spark")
     if ((shm.isDirectory || shm.mkdirs()) && shm.canWrite) {
       sweepStale(shm, maxAgeMs = 2L * 3600 * 1000)
@@ -83,7 +87,7 @@ object SparkLocal {
   }
 
   /** Delete a [[freshStreamCheckpoint]] dir (best-effort; a leaked dir is
-    * swept by [[sweepStale]] on the next session anyway). */
+    * swept by [[sweepStale]] in the next JVM anyway). */
   private[graft] def removeScratch(dir: String): Unit =
     deleteRec(new java.io.File(dir))
 

@@ -9,12 +9,6 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    // One-shot JVM: let the dedup query family reuse one checkpointed
-    // docSignatures kernel instead of recomputing it per query (the results
-    // are identical — the memo stores the exact same checkpoint lshPairs
-    // would build). Bench deliberately does NOT set this: there every query
-    // must be timed self-contained.
-    sys.props("graft.sharedKernels") = "true"
     val spark = SparkLocal.session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -233,11 +233,10 @@ object Curation {
     * hit count is a map-side semi-join + per-doc aggregation — the training
     * corpus is read once and never shuffled wider than |docs| rows. */
   def decontaminate(docs: DataFrame, threshold: Double = 0.2): DataFrame = {
-    // checkpoint (or the shared-kernel memo): the signature table feeds three
-    // consumers below — without materialization each would re-run the md5
-    // shingle kernel (see the hygiene note in Dedup.lshPairs)
-    val sig = Dedup.sharedSignatures(docs, h = 0)
-      .getOrElse(Dedup.docSignatures(docs, h = 0).localCheckpoint())
+    // checkpoint: the signature table feeds three consumers below — without
+    // materialization each would re-run the md5 shingle kernel (see the
+    // hygiene note in Dedup.lshPairs)
+    val sig = Dedup.docSignatures(docs, h = 0).localCheckpoint()
       .withColumn("is_bench", col("doc_id") % 97 === 0)
     val benchShingles = broadcast(
       sig.filter(col("is_bench")).select(explode(col("hs")).as("s")).distinct())
@@ -296,8 +295,7 @@ object Curation {
     * on |contaminated|·|bench| rows at most. Output (doc_id, n_shingles,
     * n_hit, bench_id, n_shared) ordered by doc_id. */
   def contamAttribution(docs: DataFrame, threshold: Double = 0.2): DataFrame = {
-    val sig = Dedup.sharedSignatures(docs, h = 0)
-      .getOrElse(Dedup.docSignatures(docs, h = 0).localCheckpoint())
+    val sig = Dedup.docSignatures(docs, h = 0).localCheckpoint()
       .withColumn("is_bench", col("doc_id") % 97 === 0)
     val benchEx = broadcast(sig.filter(col("is_bench"))
       .select(col("doc_id").as("bench_id"), explode(col("hs")).as("s")))
@@ -435,12 +433,11 @@ object Curation {
     * carries |eval docs|·|shingles| rows, the train side one row per
     * distinct shingle, and nothing wider than the shingle incidence ever
     * exchanges. Same [[Dedup.docSignatures]] kernel as every shingle
-    * operator (shared/memoized under the Verify JVM). Output (doc_id,
-    * split, n_shingles, n_seen, novelty) for eval docs with ≥1 shingle;
-    * novelty = 1 - n_seen/n_shingles, one IEEE subtract-of-division. */
+    * operator. Output (doc_id, split, n_shingles, n_seen, novelty) for
+    * eval docs with ≥1 shingle; novelty = 1 - n_seen/n_shingles, one IEEE
+    * subtract-of-division. */
   def ngramNovelty(docs: DataFrame): DataFrame = {
-    val sig = Dedup.sharedSignatures(docs, h = 0)
-      .getOrElse(Dedup.docSignatures(docs, h = 0).localCheckpoint())
+    val sig = Dedup.docSignatures(docs, h = 0).localCheckpoint()
       .withColumn("bucket", Hashes.h60(col("doc_id").cast("string")) % 10)
     val trainSh = sig.filter(col("bucket") < 8)
       .select(explode(col("hs")).as("s")).distinct()
@@ -502,8 +499,7 @@ object Curation {
                          mBits: Int = 1 << 20): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val sig = Dedup.sharedSignatures(docs, h = 0)
-      .getOrElse(Dedup.docSignatures(docs, h = 0).localCheckpoint())
+    val sig = Dedup.docSignatures(docs, h = 0).localCheckpoint()
       .withColumn("is_bench", col("doc_id") % 97 === 0)
     val mask = (mBits - 1).toLong
     val shifts = Array(0, 13, 26, 39)

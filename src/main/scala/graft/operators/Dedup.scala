@@ -132,42 +132,6 @@ object Dedup {
       .toDF()
   }
 
-  /** Harness-side kernel sharing (system property `graft.sharedKernels`):
-    * Verify runs the whole contract-query suite in one JVM, and the dedup
-    * family (`q_minhash_lsh`, `q_dedup_clusters`, `q_dedup_survivors`,
-    * `q_ngram_jaccard`) each recompute the identical [[docSignatures]] pass
-    * over the same document table. With the property set, the checkpointed
-    * kernel is memoized per (session, analyzed-plan semanticHash, h, k) and
-    * reused — the checkpoint blocks then live until the JVM exits, which is
-    * why this is OPT-IN for one-shot harnesses only: Bench keeps it off so
-    * every query is timed self-contained, and library callers keep the
-    * cache-hygiene contract (CacheHygieneSpec) untouched.
-    * `hs` is h-independent, so any request is served by an h≥16 superset. */
-  private def sharedKernels: Boolean =
-    sys.props.get("graft.sharedKernels").contains("true")
-
-  private val kernelMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int, Int, Int), DataFrame]
-
-  private[graft] def sharedSignatures(docs: DataFrame, h: Int,
-                                      k: Int = 9): Option[DataFrame] =
-    if (!sharedKernels) None
-    else {
-      val hEff = math.max(h, 16)
-      val key = (System.identityHashCode(docs.sparkSession),
-        docs.queryExecution.analyzed.semanticHash(), hEff, k)
-      // identityHashCode is not unique: on a hit, verify the cached frame
-      // belongs to THIS session (a stale entry from a stopped session would
-      // throw or misbehave when executed) and recompute if not
-      val cached = kernelMemo.get(key)
-      if (cached != null && (cached.sparkSession eq docs.sparkSession)) Some(cached)
-      else {
-        val fresh = docSignatures(docs, hEff, k).localCheckpoint()
-        kernelMemo.put(key, fresh)
-        Some(fresh)
-      }
-    }
-
   /** MinHash signatures: for each of `h` hash variants k, the min 60-bit
     * mixed hash over the doc's distinct 9-gram shingles.
     * Output: (doc_id, k, mh). Unfolds the [[docSignatures]] kernel. */
@@ -222,8 +186,7 @@ object Dedup {
     * overlaps). One IEEE division per cell. Output
     * (src_a, src_b, n_a, n_inter, containment) over ordered pairs a ≠ b. */
   def sourceOverlap(docs: DataFrame): DataFrame = {
-    val sig = sharedSignatures(docs, h = 0)
-      .getOrElse(docSignatures(docs, h = 0).localCheckpoint())
+    val sig = docSignatures(docs, h = 0).localCheckpoint()
     val ss = sig.join(docs.select(col("doc_id"), col("source")), "doc_id")
       .select(col("source"), explode(col("hs")).as("s")).distinct()
     val sizes = ss.groupBy("source").agg(count(lit(1)).as("n"))
@@ -259,9 +222,8 @@ object Dedup {
     * precomputed, bucketed signature store written by the bootstrap run, so
     * a batch screen is a probe into it, and candidate verification fetches
     * only the matched corpus docs' signature rows. Both sides here derive
-    * from one [[docSignatures]] kernel pass over the union (memoized under
-    * the Verify harness's shared-kernel mode). `match_id` = the smallest
-    * matching corpus doc_id (exact match wins over near). Output
+    * from one [[docSignatures]] kernel pass over the union. `match_id` =
+    * the smallest matching corpus doc_id (exact match wins over near). Output
     * (doc_id, status, match_id) for every batch doc, doc_id-ordered. */
   def incrementalDedup(docs: DataFrame, batchSource: String,
                        h: Int = 16, rows: Int = 4,
@@ -274,8 +236,7 @@ object Dedup {
       .join(corpus.select(md5(col("text")).as("hsh"), col("doc_id").as("cid")),
         "hsh")
       .groupBy("doc_id").agg(min(col("cid")).as("em"))
-    val docAgg = sharedSignatures(docs, h)
-      .getOrElse(docSignatures(docs, h).localCheckpoint())
+    val docAgg = docSignatures(docs, h).localCheckpoint()
     val srcOf = docs.select(col("doc_id").cast("long").as("doc_id"),
       col("source"))
     val bands = bandTable(docAgg, h, rows).join(srcOf, "doc_id")
@@ -555,8 +516,7 @@ object Dedup {
     // cache-hygiene contract, CacheHygieneSpec). The checkpoint runs the
     // kernel once up front, stores |docs| rows, truncates lineage, and its
     // blocks are freed by the ContextCleaner when the plan is GC'd.
-    val docAgg = sharedSignatures(docs, h)
-      .getOrElse(docSignatures(docs, h).localCheckpoint())
+    val docAgg = docSignatures(docs, h).localCheckpoint()
     lshPairsFrom(docAgg, h, rows, threshold)
   }
 
@@ -630,8 +590,7 @@ object Dedup {
     * (n_docs, n_candidates, n_verified, prec). */
   def lshTuning(docs: DataFrame, h: Int = 16, rows: Int = 4,
                 threshold: Double = 0.5): DataFrame = {
-    val docAgg = sharedSignatures(docs, h)
-      .getOrElse(docSignatures(docs, h).localCheckpoint())
+    val docAgg = docSignatures(docs, h).localCheckpoint()
     val nd = docAgg.agg(count(lit(1)).as("n_docs"))
     lshCandidates(docAgg, h, rows)
       .join(docAgg.as("ca"), col("a") === col("ca.doc_id"))
@@ -666,8 +625,7 @@ object Dedup {
     // ONE shingle-kernel checkpoint feeds both sides: the h-variant table
     // is a superset of the h=0 one (hs/c identical regardless of h), so
     // the exact AllPairs side reads the same base the banded side bands
-    val docAgg = sharedSignatures(docs, h)
-      .getOrElse(docSignatures(docs, h).localCheckpoint())
+    val docAgg = docSignatures(docs, h).localCheckpoint()
     val exact = prefixJaccardPairsFrom(
         docAgg.select(col("doc_id"), col("hs"), col("c")), tNum, tDen)
       .select("a", "b").localCheckpoint()
@@ -700,8 +658,7 @@ object Dedup {
   def lshRecallSampled(docs: DataFrame, h: Int = 16, rows: Int = 4,
                        tNum: Int = 4, tDen: Int = 5,
                        sampleMod: Int = 4): DataFrame = {
-    val docAgg = sharedSignatures(docs, h)
-      .getOrElse(docSignatures(docs, h).localCheckpoint())
+    val docAgg = docSignatures(docs, h).localCheckpoint()
     val exact = prefixJaccardPairsImpl(
         docAgg.select(col("doc_id"), col("hs"), col("c")), tNum, tDen,
         Some(sampleMod))
@@ -731,8 +688,7 @@ object Dedup {
     * O(|doc|) to O(h) per pair, at the standard ±1/√h accuracy trade.
     * Output (a, b, n_agree, jaccard_est). */
   def minhashEstimates(docs: DataFrame, h: Int = 16, rows: Int = 4): DataFrame = {
-    val docAgg = sharedSignatures(docs, h)
-      .getOrElse(docSignatures(docs, h).localCheckpoint())
+    val docAgg = docSignatures(docs, h).localCheckpoint()
     lshCandidates(docAgg, h, rows)
       .join(docAgg.as("ca"), col("a") === col("ca.doc_id"))
       .join(docAgg.as("cb"), col("b") === col("cb.doc_id"))
@@ -772,8 +728,7 @@ object Dedup {
     // dfCap+1 are exactly the stop shingles; dropping them is the oracle's
     // global-df filter, and any surviving list is complete (saturation can't
     // truncate below the bound).
-    val sh = sharedSignatures(docs, h = 0)
-      .getOrElse(docSignatures(docs, h = 0))
+    val sh = docSignatures(docs, h = 0)
       .select(col("doc_id"), explode(col("hs")).as("s"))
     val posts = sh
       .groupBy("s")
@@ -877,8 +832,7 @@ object Dedup {
     * and |cand| verification rows. */
   def prefixJaccardPairs(docs: DataFrame, tNum: Int = 4, tDen: Int = 5): DataFrame = {
     require(tNum > 0 && tNum < tDen, s"threshold $tNum/$tDen outside (0,1)")
-    val docAgg = sharedSignatures(docs, h = 0)
-      .getOrElse(docSignatures(docs, h = 0).localCheckpoint())
+    val docAgg = docSignatures(docs, h = 0).localCheckpoint()
       .select(col("doc_id"), col("hs"), col("c"))
     prefixJaccardPairsFrom(docAgg, tNum, tDen)
   }
@@ -886,9 +840,7 @@ object Dedup {
   /** [[prefixJaccardPairs]] over an already-materialized (doc_id, hs, c)
     * signature table — lets [[lshRecall]] feed BOTH its sides from ONE
     * shingle-kernel checkpoint instead of each building its own (the
-    * kernel's md5-per-shingle pass was the query's duplicated cost in
-    * self-contained bench mode; the shared-memo path already collapsed it
-    * in Verify mode). */
+    * kernel's md5-per-shingle pass was the query's duplicated cost). */
   private def prefixJaccardPairsFrom(docAgg: DataFrame, tNum: Int,
                                      tDen: Int): DataFrame =
     prefixJaccardPairsImpl(docAgg, tNum, tDen, sampleMod = None)

@@ -131,12 +131,16 @@ object ExactOutliers {
 
   /** The points of cell `c`'s 7x7 window in a block counting-sorted by
     * cell (`start` as in [[ballCounts]]): seven runs of seven adjacent
-    * cells, copied into one array. */
+    * cells, copied into one array centre row first (di = 0, -1, 1, -2, 2,
+    * -3, 3). A capped resident then meets its near neighbours before the
+    * far rows, which lie mostly beyond D; the count is min(|ball|, cap) in
+    * any order. */
   private def window(s: Array[Double], start: Array[Long], c: Int): Array[Double] = {
     val r = BlockHalo.Halo
     val out = new Array[Double](BlockHalo.windowSum(start, c, r).toInt)
     var o = 0
-    for (di <- -r to r) {
+    for (t <- 0 to 2 * r) {
+      val di = if (t % 2 == 1) -(t + 1) / 2 else t / 2
       val from = start(c + di * BlockHalo.Width - r).toInt
       val n = start(c + di * BlockHalo.Width + r + 1).toInt - from
       System.arraycopy(s, from, out, o, n)

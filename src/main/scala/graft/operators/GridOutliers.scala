@@ -45,7 +45,7 @@ object GridOutliers {
   /** N3/N7 neighborhood sums (`big_data_computing_1.py:91-98` A3/J2), one
     * row per non-empty cell: (i, j, size, n3, n7). A cell with a null index
     * has no neighborhood and no row. */
-  def neighborStats(cells: DataFrame, m: Int): DataFrame =
+  def neighborStats(cells: DataFrame): DataFrame =
     neighborhoods(cells).filter(col("i").isNotNull && col("j").isNotNull)
 
   /** [[neighborStats]] plus one row (null, null, size, null, null) per cell
@@ -91,7 +91,7 @@ object GridOutliers {
   /** Cell stats + sure/uncertain classification (P5/P6,
     * `big_data_computing_1.py:101-103`). */
   def classifiedCells(points: DataFrame, d: Double, m: Int): DataFrame =
-    classify(neighborStats(cellCounts(points, d), m), m)
+    classify(neighborStats(cellCounts(points, d)), m)
 
   /** Single-row summary (`big_data_computing_1.py:109-111` A4): total points,
     * points in sure-outlier cells, points in uncertain cells. One distributed

@@ -77,24 +77,6 @@ object KMeans {
     * fused-vs-separate equality). */
   def trainSubCenters(emb: DataFrame, m: Int, subDim: Int, k: Int,
                       iters: Int): Seq[Seq[(Long, Array[Double])]] = {
-    if (!sharedKernels) return trainSubCentersImpl(emb, m, subDim, k, iters)
-    // same opt-in harness-side memo as [[trainCenters]] — q_pq_codes and
-    // q_pq_adc train the identical books inside one Verify JVM
-    val key = (emb.queryExecution.analyzed.semanticHash(), m, subDim, k, iters)
-    val cached = subCenterMemo.get(key)
-    if (cached != null) cached
-    else {
-      val fresh = trainSubCentersImpl(emb, m, subDim, k, iters)
-      subCenterMemo.put(key, fresh)
-      fresh
-    }
-  }
-
-  private val subCenterMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, Int, Int, Int, Int), Seq[Seq[(Long, Array[Double])]]]
-
-  private def trainSubCentersImpl(emb: DataFrame, m: Int, subDim: Int,
-      k: Int, iters: Int): Seq[Seq[(Long, Array[Double])]] = {
     val vecs = emb.select(col("vec_id").cast("long").as("vec_id"), col("emb"))
     val init = vecs.filter(col("vec_id") < k).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
@@ -160,34 +142,6 @@ object KMeans {
     * — constant in corpus size. */
   def trainCenters(emb: DataFrame, k: Int = 8,
                    iters: Int = 2): Seq[(Long, Array[Double])] = {
-    if (!sharedKernels) return trainCentersImpl(emb, k, iters)
-    // Harness-side codebook sharing (same opt-in property as
-    // Dedup.sharedSignatures): q_ann_ivf, q_neardup_blocked and q_semdedup
-    // each train the identical (table, k, iters) codebook inside one
-    // Verify JVM. Unlike the signature kernel the memoized value is a
-    // driver-side Seq of k·d doubles — no checkpoint blocks, no session
-    // lifetime concern (a same-plan hit from another session would have
-    // trained the identical centers anyway, since training is a pure
-    // deterministic function of the table contents). Bench keeps the
-    // property off so every query trains self-contained.
-    val key = (emb.queryExecution.analyzed.semanticHash(), k, iters)
-    val cached = centerMemo.get(key)
-    if (cached != null) cached
-    else {
-      val fresh = trainCentersImpl(emb, k, iters)
-      centerMemo.put(key, fresh)
-      fresh
-    }
-  }
-
-  private def sharedKernels: Boolean =
-    sys.props.get("graft.sharedKernels").contains("true")
-
-  private val centerMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, Int, Int), Seq[(Long, Array[Double])]]
-
-  private def trainCentersImpl(emb: DataFrame, k: Int,
-                               iters: Int): Seq[(Long, Array[Double])] = {
     val vecs = emb.select(col("vec_id").cast("long").as("vec_id"), col("emb"))
     var centers: Seq[(Long, Array[Double])] =
       vecs.filter(col("vec_id") < k).collect()

@@ -685,11 +685,9 @@ object TextAnalysis {
     * Served by the shared [[Dedup.docSignatures]] kernel: `hs` already holds
     * the distinct shingle hashes ([[Hashes.h60Jvm]], bit-equal to the h60
     * Column twin — HashesSpec), so the fingerprint is `array_min(hs)` with no
-    * second shingle pass; under `graft.sharedKernels` the whole dedup family
-    * and this query share ONE kernel execution. */
+    * second shingle pass. */
   def fingerprint(docs: DataFrame): DataFrame =
-    Dedup.sharedSignatures(docs, h = 0)
-      .getOrElse(Dedup.docSignatures(docs, h = 0))
+    Dedup.docSignatures(docs, h = 0)
       .select(col("doc_id"), array_min(col("hs")).as("fp"))
       .orderBy("doc_id")
 

@@ -90,8 +90,10 @@ object Sources {
   /** The file-replay directory behind a streaming frame, if any — the
     * size probe for [[withDrainPartitions]] (a streaming frame's
     * optimizedPlan.stats cannot be read, but its SOURCE directory can be
-    * sized). Non-file sources (MemoryStream specs) return None. */
-  private def replaySourceDir(df: DataFrame): Option[String] =
+    * sized) and the cache identity of
+    * [[graft.streaming.DedupStream.stateAudit]]. Non-file sources
+    * (MemoryStream specs) return None: the audit then drains fresh. */
+  private[graft] def replaySourceDir(df: DataFrame): Option[String] =
     // the ANALYZED plan: a raw `readStream...parquet(path)` frame's
     // un-analyzed plan is still an UnresolvedDataSource leaf (it only
     // resolves to StreamingRelation under analysis, which is safe to

@@ -150,29 +150,6 @@ object DedupStream {
     }: Unit
   }
 
-  /** The file-replay directory behind a streaming frame, if it is a
-    * file-source stream — the trustworthy cache identity the audit keys
-    * on. A non-file source returns None (the audit then drains fresh —
-    * correct, never aliased). */
-  private def replaySourcePath(df: DataFrame): Option[String] =
-    // ANALYZED plan (r15): a raw `readStream...parquet(path)` frame's
-    // un-analyzed plan is still an UnresolvedDataSource leaf, so probing
-    // `.logical` missed the memo key for gate-shaped (source-rooted)
-    // frames; analysis is safe on a streaming frame — only EXECUTION
-    // throws
-    df.queryExecution.analyzed.collectFirst {
-      case org.apache.spark.sql.execution.streaming.runtime.StreamingRelation(
-          ds, _, _) => ds.options.get("path")
-      // Spark 4 defers file-source resolution: readStream.parquet(path)
-      // yields UnresolvedDataSource at construction time, so the
-      // StreamingRelation case never fires on an un-analyzed frame (the
-      // r12 bench symptom: the audit cache key resolved to None and the
-      // drain re-ran on EVERY rep — 0.17 s → 3.5 s/rep)
-      case u: org.apache.spark.sql.catalyst.plans.logical.UnresolvedDataSource
-          if u.isStreaming =>
-        u.paths.headOption.orElse(u.options.get("path"))
-    }.flatten
-
   /** (name, length, mtime, head-CRC) digest of the replay directory's
     * files: the content half of the cache key, so a REWRITTEN replay at
     * the same path misses and re-drains instead of serving stale state.
@@ -253,7 +230,7 @@ object DedupStream {
       }
       ckpt
     }
-    val ckpt = replaySourcePath(stream) match {
+    val ckpt = graft.sources.Sources.replaySourceDir(stream) match {
       case Some(src) =>
         auditCkpts.computeIfAbsent(
           s"$src#${contentFingerprint(spark, src)}", _ => drain())
@@ -367,13 +344,11 @@ object DedupStream {
   def nearDupReplay(stream: DataFrame, docsBatch: DataFrame, queryName: String,
                     h: Int = 16, rows: Int = 4,
                     threshold: Double = 0.5): DataFrame =
-    // the signature table is the verify join's static side — checkpoint
-    // (or reuse the harness memo) so the per-doc MD5+MinHash kernel runs
-    // once, not once per micro-batch, exactly as the batch lshPairs path
+    // the signature table is the verify join's static side — checkpoint it
+    // so the per-doc MD5+MinHash kernel runs once, not once per
+    // micro-batch, exactly as the batch lshPairs path
     nearDupReplayWith(stream,
-      graft.operators.Dedup.sharedSignatures(docsBatch, h)
-        .getOrElse(graft.operators.Dedup.docSignatures(docsBatch, h)
-          .localCheckpoint()),
+      graft.operators.Dedup.docSignatures(docsBatch, h).localCheckpoint(),
       queryName, h, rows, threshold)
 
   /** [[nearDupReplay]] with the signature store PRE-materialized — the

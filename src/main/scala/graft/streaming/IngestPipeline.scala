@@ -56,9 +56,8 @@ object IngestPipeline {
       () => s1 = DedupStream.runReplay(docStream1, s"${nameBase}_exact")
         .select(col("keeper").as("doc_id")).distinct()
         .localCheckpoint(),
-      () => docAgg = graft.operators.Dedup.sharedSignatures(docsBatch, 16)
-        .getOrElse(graft.operators.Dedup.docSignatures(docsBatch, 16)
-          .localCheckpoint()),
+      () => docAgg = graft.operators.Dedup.docSignatures(docsBatch, 16)
+        .localCheckpoint(),
       () => vecs = embBatch.select(col("vec_id"), col("emb"))
         .localCheckpoint(),
       () => bander = graft.operators.Similarity.lshStreamBander(embBatch)): Unit

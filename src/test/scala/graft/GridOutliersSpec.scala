@@ -75,7 +75,7 @@ class GridOutliersSpec extends AnyFunSuite with SharedSpark {
     val row = GridOutliers.summary(withNull, d, m).head()
     assert(row.getLong(0) == pts.length + 1, "n_points is the oracle's COUNT(*)")
     assert(row.getLong(1) == base.getLong(1) && row.getLong(2) == base.getLong(2))
-    val stats = GridOutliers.neighborStats(GridOutliers.cellCounts(withNull, d), m)
+    val stats = GridOutliers.neighborStats(GridOutliers.cellCounts(withNull, d))
     assert(stats.filter(col("i").isNull || col("j").isNull).count() == 0)
     assert(stats.count() == GridOutliers.cellCounts(df, d).count())
     val balls = ExactOutliers.ballCounts(withNull, d).select("id").as[Long].collect()
@@ -89,7 +89,7 @@ class GridOutliersSpec extends AnyFunSuite with SharedSpark {
     val far = 1L << 40
     val cells = Seq((5L, 7L, 2L), (5L + (1L << 32), 7L, 3L), (6L + (1L << 32), 8L, 1L),
       (far, -far, 4L), (far + 3, -far - 3, 1L), (-far - 64, far + 63, 5L), (-far - 65, far + 64, 1L))
-    val got = GridOutliers.neighborStats(cells.toDF("i", "j", "size"), 3)
+    val got = GridOutliers.neighborStats(cells.toDF("i", "j", "size"))
       .select("i", "j", "size", "n3", "n7").as[(Long, Long, Long, Long, Long)].collect().toSet
     assert(got == Set((5L, 7L, 2L, 2L, 2L),
       (5L + (1L << 32), 7L, 3L, 4L, 4L), (6L + (1L << 32), 8L, 1L, 4L, 4L),

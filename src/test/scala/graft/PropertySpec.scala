@@ -191,7 +191,7 @@ class PropertySpec extends AnyFunSuite with SharedSpark {
     def window(i: Long, j: Long, r: Int): Long =
       (for (di <- -r to r; dj <- -r to r) yield size.getOrElse((i + di, j + dj), 0L)).sum
     val want = cells.map { case (i, j, s) => (i, j, s, window(i, j, 1), window(i, j, 3)) }.toSet
-    val got = GridOutliers.neighborStats(cells.toDF("i", "j", "size"), 3)
+    val got = GridOutliers.neighborStats(cells.toDF("i", "j", "size"))
       .select("i", "j", "size", "n3", "n7").as[(Long, Long, Long, Long, Long)].collect()
     val wrong = got.toSet diff want
     val sameCount = got.length == cells.length
