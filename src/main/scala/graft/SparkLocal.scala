@@ -12,12 +12,12 @@ import org.apache.spark.sql.SparkSession
   */
 object SparkLocal {
 
-  /** One session builder for every harness main (Verify/Bench/Prof/
-    * ScaleProof/SkewProof/Explain/Pins). Before round 7 the same
-    * six config lines were copy-pasted across ten mains and drifted: Bench
-    * never pinned the session timezone, so any timestamp-typed read outside
-    * the Verify gate would have been host-timezone-dependent. Centralizing
-    * makes the config a single point of truth:
+  /** The settings every session builder applies: this one
+    * (`SparkLocal.session`), the CLI apps' `AppSession.get` and the test
+    * session. Before round 7 the same config lines were copy-pasted across
+    * ten mains and drifted: Bench never pinned the session timezone, so any
+    * timestamp-typed read outside the Verify gate would have been
+    * host-timezone-dependent. One list keeps them from drifting again:
     *
     *  - `session.timeZone=UTC` — pinned EVERYWHERE. `Sources.events`
     *    normalizes TIMESTAMP/TIMESTAMP_NTZ columns to epoch nanos via a
@@ -27,6 +27,20 @@ object SparkLocal {
     *    both TIMESTAMP(NANOS) and timestamp[us]; with this set, nanos read
     *    as long and micros read as TIMESTAMP_NTZ, and the source loader
     *    handles both (the round-6 regression was exactly this drift).
+    *  - the checkpoint file manager — every streaming query's offset log,
+    *    commit log, metadata and state-store deltas are written through
+    *    [[graft.streaming.NioCheckpointFileManager]], without the process
+    *    forks of Hadoop's local filesystem.
+    */
+  val sharedConf: Map[String, String] = Map(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[graft.streaming.NioCheckpointFileManager].getName)
+
+  /** One session builder for every harness main (Verify/Bench/Prof/
+    * ScaleProof/SkewProof/Explain/Pins): [[sharedConf]] plus
+    *
     *  - shuffle partitions = thread count — local[n] has n execution slots;
     *    the 200 default just multiplies scheduling overhead.
     *  - AQE on — the runtime re-planner we rely on at cluster scale;
@@ -36,12 +50,11 @@ object SparkLocal {
               extraConf: Seq[(String, String)] = Nil): SparkSession = {
     val b = SparkSession.builder()
       .master(s"local[$threads]")
+      .config(sharedConf)
       .config("spark.sql.shuffle.partitions", threads)
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.local.dir", localDir)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // ContextCleaner frees localCheckpoint/broadcast blocks only after the
       // owning object is GC'd; the default periodic-GC interval (30 min)
       // outlives an entire harness run, so a big heap accumulates dead
@@ -70,11 +83,13 @@ object SparkLocal {
   /** Fresh scratch dir for a FINITE replay drain's streaming checkpoint,
     * on the same tmpfs as shuffle (optimization r15, guide §6 I/O
     * placement): every micro-batch writes an offset WAL entry, a commit
-    * log entry and one state-store delta file per shuffle partition —
-    * dozens of small filesystem round trips per batch. Spark's fallback
-    * temporary checkpoint lands on java.io.tmpdir, the container's
-    * virtual disk with intermittent burst collapse, while a gate
-    * replay's checkpoint needs NO durability: the drain IS the
+    * log entry and one state-store delta file per shuffle partition.
+    * What made those writes slow was not the disk but Hadoop's local
+    * filesystem forking `chmod`/`readlink` for each one, which
+    * [[graft.streaming.NioCheckpointFileManager]] removes.
+    * Spark's fallback temporary checkpoint lands on java.io.tmpdir, the
+    * container's virtual disk with intermittent burst collapse, while a
+    * gate replay's checkpoint needs NO durability: the drain IS the
     * computation and the caller deletes the dir right after
     * ([[removeScratch]]). A production stream that must survive a
     * restart passes its own durable checkpointLocation instead — this

@@ -34,12 +34,9 @@ object AppSession {
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString))
       .config("spark.sql.adaptive.enabled", "true")
-      // UTC + nanosAsLong mirror SparkLocal.session (kept separate only
-      // because apps honor SPARK_MASTER for real-cluster submission): the
-      // event-time loaders' timestamp→nanos normalization is only
-      // deterministic under a pinned session timezone
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // a builder apart from SparkLocal.session only because apps honor
+      // SPARK_MASTER for real-cluster submission
+      .config(graft.SparkLocal.sharedConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     (s, owned)

@@ -122,9 +122,8 @@ object DedupStream {
     * stream's own source directory plus a content fingerprint (r11
     * ADVICE: a caller-supplied key could silently alias two different
     * streams onto one drained state, and never invalidated if the replay
-    * was rewritten); `computeIfAbsent` both blocks concurrent first
-    * callers and refuses to cache a FAILED drain (the compute throws →
-    * no mapping). */
+    * was rewritten); `compute` both blocks concurrent callers and refuses
+    * to cache a FAILED drain (the compute throws → mapping unchanged). */
   private val auditCkpts =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
@@ -231,9 +230,13 @@ object DedupStream {
       ckpt
     }
     val ckpt = graft.sources.Sources.replaySourceDir(stream) match {
+      // a hit touches its dir, so another JVM's stale-dir sweep (2 h
+      // cutoff) never takes a checkpoint in use; a hit whose dir is gone
+      // anyway (setLastModified fails) re-drains
       case Some(src) =>
-        auditCkpts.computeIfAbsent(
-          s"$src#${contentFingerprint(spark, src)}", _ => drain())
+        auditCkpts.compute(s"$src#${contentFingerprint(spark, src)}", (_, dir) =>
+          if (dir != null && new java.io.File(dir).setLastModified(System.currentTimeMillis())) dir
+          else drain())
       case None => drain()
     }
     spark.read.format("statestore").load(ckpt)

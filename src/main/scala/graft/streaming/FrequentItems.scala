@@ -140,6 +140,17 @@ final class SamplerState(p: StreamParams, seed: Long) extends Serializable {
 /** Structured-Streaming runner: readStream → foreachBatch fold (§2.10). */
 object FrequentItemsStream {
 
+  /** Trigger interval of [[run]]. Each micro-batch costs Spark about 84 ms
+    * of driver CPU whatever its size (closure cleaning, Catalyst, progress
+    * reporting; 4 vCPUs, `local[4]`), while the fold of its few thousand
+    * items costs under a millisecond. Back-to-back batches
+    * (`ProcessingTime(0)`) would spend that fixed CPU as often as a batch
+    * can finish; this pace spends idle time instead. At 20k items/s it
+    * still halves the latency of the back-to-back stream whose batches
+    * forked `chmod`/`readlink` for every checkpoint write (those forks
+    * used to pace it). The reference's DStream batch interval is 0.01 s. */
+  val TriggerPaceMs = 100L
+
   /** Attach the stateful fold to a streaming Dataset of (seq, item) rows.
     * Each micro-batch is sorted by seq before folding (arrival order); the
     * query is stopped (asynchronously) once n items are processed. */
@@ -151,7 +162,7 @@ object FrequentItemsStream {
     val query = stream.writeStream
       .queryName(queryName)
       .outputMode("append")
-      .trigger(Trigger.ProcessingTime(0L))
+      .trigger(Trigger.ProcessingTime(TriggerPaceMs))
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // arrival order: explicit seq column when present (test fixtures);
         // a single socket receiver already yields rows in arrival order.
@@ -177,7 +188,12 @@ object FrequentItemsStream {
   }
 
   /** Socket source matching the reference's input (`big_data_computing_3.py:62`):
-    * text lines of integers, consumed in receiver arrival order. */
+    * text lines of integers, consumed in receiver arrival order.
+    * `numPartitions` stays at its default (`defaultParallelism`): Spark's
+    * socket reader indexes a `ListBuffer` by position, so a partition of
+    * s rows costs about s²/2 list steps. With one partition, a backlog
+    * batch of a few hundred thousand rows spins for tens of seconds in one
+    * task. */
   def socketItems(spark: SparkSession, host: String, port: Int): DataFrame =
     spark.readStream.format("socket")
       .option("host", host).option("port", port).load()

@@ -13,12 +13,11 @@ object SharedSpark {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
+      .config(SparkLocal.sharedConf)
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // the documented deployment path: native functions via extensions
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
