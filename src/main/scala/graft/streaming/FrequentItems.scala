@@ -1,9 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.streaming.StreamingRelationV2
+import org.apache.spark.sql.execution.streaming.sources.TextSocketTable
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.LongType
 
 import graft.model.StreamParams
 
@@ -140,22 +145,27 @@ final class SamplerState(p: StreamParams, seed: Long) extends Serializable {
 /** Structured-Streaming runner: readStream → foreachBatch fold (§2.10). */
 object FrequentItemsStream {
 
-  /** Trigger interval of [[run]]. Each micro-batch costs Spark about 84 ms
-    * of driver CPU whatever its size (closure cleaning, Catalyst, progress
-    * reporting; 4 vCPUs, `local[4]`), while the fold of its few thousand
-    * items costs under a millisecond. Back-to-back batches
-    * (`ProcessingTime(0)`) would spend that fixed CPU as often as a batch
-    * can finish; this pace spends idle time instead. At 20k items/s it
-    * still halves the latency of the back-to-back stream whose batches
-    * forked `chmod`/`readlink` for every checkpoint write (those forks
-    * used to pace it). The reference's DStream batch interval is 0.01 s. */
+  /** Trigger interval of [[run]]. Each micro-batch costs Spark a fixed
+    * driver CPU whatever its size (progress reporting, offset and commit
+    * logs, the collect job's scheduling; 4 vCPUs, `local[4]`), while the
+    * fold of its few thousand items costs under a millisecond.
+    * Back-to-back batches (`ProcessingTime(0)`) would spend that fixed CPU
+    * as often as a batch can finish; this pace spends idle time instead. At
+    * 20k items/s it still halves the latency of the back-to-back stream
+    * whose batches forked `chmod`/`readlink` for every checkpoint write
+    * (those forks used to pace it). The reference's DStream batch interval
+    * is 0.01 s. */
   val TriggerPaceMs = 100L
 
-  /** Attach the stateful fold to a streaming Dataset of (seq, item) rows.
-    * Each micro-batch is sorted by seq before folding (arrival order); the
-    * query is stopped (asynchronously) once n items are processed. */
+  /** Attach the stateful fold to a streaming Dataset with a bigint `item`
+    * column. Each micro-batch is collected by one job over its own planned
+    * RDD and folded in arrival order: by a bigint `seq` column when the
+    * stream has one, else by undoing the socket source's round-robin deal
+    * (see [[ArrivalOrder]]); any other stream is refused. The query is
+    * stopped (asynchronously) once n items are processed. */
   def run(stream: DataFrame, p: StreamParams, seed: Long,
           queryName: String = "freq_items"): (SamplerState, StreamingQuery) = {
+    val arrival = ArrivalOrder.of(stream)
     val state = new SamplerState(p, seed)
     val ref = new java.util.concurrent.atomic.AtomicReference[StreamingQuery]()
     val stopRequested = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -164,13 +174,7 @@ object FrequentItemsStream {
       .outputMode("append")
       .trigger(Trigger.ProcessingTime(TriggerPaceMs))
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // arrival order: explicit seq column when present (test fixtures);
-        // a single socket receiver already yields rows in arrival order.
-        val ordered =
-          if (batch.columns.contains("seq")) batch.orderBy("seq") else batch
-        val items = ordered.select(col("item").cast("long"))
-          .collect().map(_.getLong(0))
-        val done = state.foldBatch(items)
+        val done = state.foldBatch(arrival.items(batch))
         // stop-at-n (`big_data_computing_3.py:95-96,101-107`): signal from the
         // batch thread, stop from a watcher thread (stop() joins the batch).
         // The watcher spin-waits for `ref` so a first micro-batch that already
@@ -188,16 +192,113 @@ object FrequentItemsStream {
   }
 
   /** Socket source matching the reference's input (`big_data_computing_3.py:62`):
-    * text lines of integers, consumed in receiver arrival order.
-    * `numPartitions` stays at its default (`defaultParallelism`): Spark's
-    * socket reader indexes a `ListBuffer` by position, so a partition of
-    * s rows costs about s²/2 list steps. With one partition, a backlog
-    * batch of a few hundred thousand rows spins for tens of seconds in one
-    * task. */
+    * text lines of integers. Spark's socket source deals each batch's lines
+    * round-robin over its partitions, so partition order is not arrival
+    * order; [[run]] undoes the deal. `numPartitions` stays at its default
+    * (`defaultParallelism`): Spark's socket reader indexes a `ListBuffer` by
+    * position, so a partition of s rows costs about s²/2 list steps. With
+    * one partition, a backlog batch of a few hundred thousand rows spins for
+    * tens of seconds in one task. */
   def socketItems(spark: SparkSession, host: String, port: Int): DataFrame =
     spark.readStream.format("socket")
       .option("host", host).option("port", port).load()
       .select(col("value").cast("long").as("item"))
+}
+
+/** How [[FrequentItemsStream.run]] gets a micro-batch's items in arrival
+  * order: one `runJob` over the batch's planned RDD (`foreachBatch` hands a
+  * `LogicalRDD` over the stream's own RDD, so no second plan is built)
+  * returns one primitive array per partition, which [[arrange]] puts in
+  * order on the driver. Chosen once per query by [[ArrivalOrder.of]]. */
+private[streaming] sealed abstract class ArrivalOrder(columns: Array[String]) {
+
+  /** Puts the per-partition arrays, in partition order, in arrival order. */
+  protected def arrange(parts: Array[Array[Long]]): Array[Long]
+
+  final def items(batch: DataFrame): Array[Long] = {
+    val rdd = batch.queryExecution.toRdd
+    val collect = new LongColumns(columns.map(batch.schema.fieldIndex), columns)
+    arrange(rdd.sparkContext.runJob(rdd, collect, 0 until rdd.getNumPartitions))
+  }
+}
+
+private[streaming] object ArrivalOrder {
+
+  def of(stream: DataFrame): ArrivalOrder = {
+    requireBigint(stream, "item")
+    if (stream.columns.contains("seq")) { requireBigint(stream, "seq"); BySeq }
+    else if (readsSocket(stream)) SocketDeal
+    else throw new IllegalArgumentException(
+      "the frequent-items fold needs each micro-batch in arrival order: give " +
+        "the stream a bigint `seq` column, or read it with socketItems")
+  }
+
+  private def requireBigint(stream: DataFrame, name: String): Unit = {
+    val field = stream.schema.find(_.name == name)
+    require(field.exists(_.dataType == LongType),
+      s"the frequent-items stream needs a bigint `$name` column, found " +
+        field.fold("none")(_.dataType.simpleString))
+  }
+
+  /** The stream reads Spark's socket source (checked on the analyzed plan:
+    * a `readStream` leaf resolves to its relation only under analysis). */
+  private def readsSocket(stream: DataFrame): Boolean =
+    stream.queryExecution.analyzed.exists {
+      case r: StreamingRelationV2 => r.table.isInstanceOf[TextSocketTable]
+      case _ => false
+    }
+
+  /** (seq, item) pairs, sorted by seq on the driver (stable for equal seq). */
+  private object BySeq extends ArrivalOrder(Array("seq", "item")) {
+    protected def arrange(parts: Array[Array[Long]]): Array[Long] = {
+      val pairs = parts.flatten
+      val order = Array.range(0, pairs.length / 2).sortBy(i => pairs(2 * i))
+      order.map(i => pairs(2 * i + 1))
+    }
+  }
+
+  /** Spark's socket source deals the k-th line of a batch to partition
+    * k mod N (`TextSocketMicroBatchStream.planInputPartitions`), so row k is
+    * `parts(k % N)(k / N)`. A batch whose partition sizes do not fit that
+    * deal fails loudly rather than fold a permuted stream. */
+  private object SocketDeal extends ArrivalOrder(Array("item")) {
+    protected def arrange(parts: Array[Array[Long]]): Array[Long] = {
+      val nParts = parts.length
+      val n = parts.iterator.map(_.length).sum
+      parts.iterator.zipWithIndex.foreach { case (part, i) =>
+        if (part.length != (n - i + nParts - 1) / nParts)
+          throw new IllegalStateException(
+            s"socket micro-batch of $n rows is not a round-robin deal over " +
+              s"$nParts partitions: sizes ${parts.map(_.length).mkString(",")}")
+      }
+      val out = new Array[Long](n)
+      var k = 0
+      while (k < n) { out(k) = parts(k % nParts)(k / nParts); k += 1 }
+      out
+    }
+  }
+}
+
+/** The bigint columns at `ordinals` of one partition's rows, row after row,
+  * as one primitive array. A named class, not a lambda: `SparkContext.clean`
+  * reads a lambda's enclosing class file with ASM on every job. A null
+  * fails the task. */
+private final class LongColumns(ordinals: Array[Int], names: Array[String])
+    extends ((TaskContext, Iterator[InternalRow]) => Array[Long]) with Serializable {
+  def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Array[Long] = {
+    val out = new scala.collection.mutable.ArrayBuilder.ofLong
+    while (rows.hasNext) {
+      val row = rows.next()
+      var c = 0
+      while (c < ordinals.length) {
+        if (row.isNullAt(ordinals(c)))
+          throw new NullPointerException(s"null `${names(c)}` in a frequent-items micro-batch")
+        out += row.getLong(ordinals(c))
+        c += 1
+      }
+    }
+    out.result()
+  }
 }
 
 /** Distributed, mergeable uniform reservoir (SURVEY.md §2.9 C5 scalable

@@ -50,6 +50,57 @@ class FrequentItemsSpec extends AnyFunSuite with SharedSpark {
     assert(state.trueFrequent.nonEmpty)
   }
 
+  test("a seq stream is folded in seq order even when a batch arrives out of order") {
+    implicit val sqlCtx = spark.sqlContext
+    val ms = MemoryStream[(Long, Long)]
+    val df = ms.toDF().select(col("_1").as("seq"), col("_2").as("item"))
+    val (state, query) = FrequentItemsStream.run(df, p, seed = 4L, queryName = "t_freq_seq")
+    // each batch arrives in reverse seq order
+    stream.grouped(300).foreach { b => ms.addData(b.reverse); query.processAllAvailable() }
+    if (query.isActive) query.stop()
+    val replay = new SamplerState(p, seed = 4L)
+    replay.fold(stream.take(state.processed.toInt).map(_._2))
+    assert(state.processed == 1200L)
+    assert(state.reservoir == replay.reservoir)
+    assert(state.sticky == replay.sticky)
+    assert(state.exact == replay.exact)
+  }
+
+  test("a stream with neither seq nor a socket source is refused, naming seq") {
+    implicit val sqlCtx = spark.sqlContext
+    val ms = MemoryStream[Long]
+    val df = ms.toDF().select(col("value").as("item"))
+    val e = intercept[IllegalArgumentException](
+      FrequentItemsStream.run(df, p, seed = 1L, queryName = "t_freq_unordered"))
+    assert(e.getMessage.contains("`seq`"), e.getMessage)
+    assert(!spark.streams.active.exists(_.name == "t_freq_unordered"))
+  }
+
+  test("a non-bigint item or seq is refused, a null item fails the query") {
+    implicit val sqlCtx = spark.sqlContext
+    val ints = MemoryStream[(Long, Int)].toDF()
+    Seq(
+      "item" -> ints.select(col("_1").as("seq"), col("_2").as("item")),
+      "item" -> ints.select(col("_1").as("seq"), col("_1").cast("string").as("item")),
+      "seq" -> ints.select(col("_2").as("seq"), col("_1").as("item"))
+    ).foreach { case (name, df) =>
+      val e = intercept[IllegalArgumentException](
+        FrequentItemsStream.run(df, p, seed = 1L, queryName = "t_freq_type"))
+      assert(e.getMessage.contains(s"bigint `$name`"), e.getMessage)
+    }
+
+    val ms = MemoryStream[(Long, Option[Long])]
+    val df = ms.toDF().select(col("_1").as("seq"), col("_2").as("item"))
+    val (state, query) = FrequentItemsStream.run(df, p, seed = 1L, queryName = "t_freq_null")
+    ms.addData((1L, Some(3L)), (2L, None), (3L, Some(4L)))
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      query.processAllAvailable())
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(c => String.valueOf(c.getMessage).contains("null `item`")), e.getMessage)
+    assert(!query.isActive)
+    assert(state.processed == 0L)
+  }
+
   test("mergeable reservoir: partition-count invariant, size min(m,n)") {
     val agg = new ReservoirAgg(p.reservoirSize, salt = 99L)
     val ds1 = spark.createDataset(stream.take(1000)).repartition(1)

@@ -81,12 +81,14 @@ class GoldenStdoutSpec extends AnyFunSuite with SharedSpark {
   }
 
   /** The randomized estimator sections are STRUCTURE-pinned, not
-    * value-pinned: Spark's socket micro-batch source round-robins its
-    * buffered rows across partitions, so the reservoir/sticky RNG draw
-    * sequence sees a carving-dependent permutation of the stream (the
-    * reference's single-receiver DStream folds in strict arrival order;
-    * the estimators' guarantees are permutation-invariant, their traces
-    * are not). The EXACT section is order-free and stays value-exact. */
+    * value-pinned: the golden was captured while the runner still folded
+    * each socket micro-batch in the socket source's round-robin partition
+    * order, so its reservoir/sticky traces belong to a carving-dependent
+    * permutation of the stream. The runner now undoes that deal and folds
+    * in arrival order like the reference's single-receiver DStream;
+    * `SocketStreamSpec` pins that order against a driver-side replay. The
+    * estimators' guarantees are permutation-invariant, their traces are
+    * not. The EXACT section is order-free and stays value-exact. */
   private def maskSampled(lines: Seq[String]): Seq[String] = {
     val afterExact = lines.indexWhere(_ == "RESERVOIR SAMPLING")
     val (exactPart, sampledPart) = lines.splitAt(afterExact)
@@ -134,7 +136,7 @@ class GoldenStdoutSpec extends AnyFunSuite with SharedSpark {
         (ours.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
       fail(s"hw3 golden regenerated at $goldenPath — review and re-run")
     }
-    // mask the ephemeral port and the carving-permuted sampled sections;
+    // mask the ephemeral port and the sampled sections (see maskSampled);
     // the header/engine/EXACT sections are value-exact
     def norm(ls: Seq[String]): Seq[String] = maskSampled(ls.map(
       _.replaceAll("port = [0-9]+", "port = <PORT>")))
