@@ -133,8 +133,9 @@ object SparkEntry {
     "q_topk_cells" -> ((s, dir) =>
       GridOutliers.topKCells(Sources.points2d(s, dir), D, K)),
     // ---- ExactOutliers (C1/J1) ----
-    // Sources.spread: parallelize the replica-explode + kernel pipeline
-    // (scale-adaptive scan floor — no-op past one scan split)
+    // Sources.spread: parallelize the kernel's map side (scale-adaptive
+    // scan floor — no-op past one scan split); its exchange runs as a job
+    // of its own when the kernel DataFrame is built
     "q_exact_outliers" -> ((s, dir) =>
       ExactOutliers.outliers(Sources.spread(Sources.points2d(s, dir)), D, M, K)),
     "q_exact_outlier_count" -> ((s, dir) =>

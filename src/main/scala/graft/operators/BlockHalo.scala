@@ -3,21 +3,31 @@ package graft.operators
 import scala.collection.mutable
 import scala.reflect.ClassTag
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.SparkSession
 
-/** Block-halo routing and block assembly shared by the two HW1 outlier
-  * counts ([[ExactOutliers.ballCounts]], [[GridOutliers.neighborStats]]),
-  * both on the Λ-grid of [[GridOutliers.cellify]].
+/** Block-halo routing shared by the two HW1 outlier counts
+  * ([[ExactOutliers.ballCounts]], [[GridOutliers.neighborStats]]), both on
+  * the Λ-grid of [[GridOutliers.cellify]].
   *
   * Cell (i, j) belongs to the block (i >> 6, j >> 6) of `Side` × `Side`
   * cells. Both kernels read the 7×7 window around each cell of a block
   * (N7, and every point within D, since 3Λ = 1.06·D), so a block also needs
-  * the ring of `Halo` = 3 cells around it: each cell row goes to its own
-  * block and to every neighbour block whose ring covers it, one copy for a
-  * cell at least 3 cells from every block edge, at most four at a corner,
-  * ≈ (1 + 6/Side)² = 1.20 on average. One hash exchange on (`blk_i`,
-  * `blk_j`) then puts everything a block's kernel reads in one partition.
+  * the ring of `Halo` = 3 cells around it: [[copies]] sends each cell to its
+  * own block and to every neighbour block whose ring covers it, one copy for
+  * a cell at least 3 cells from every block edge, at most four at a corner,
+  * ≈ (1 + 6/Side)² = 1.20 on average.
+  *
+  * Both kernels run on the input's own RDD (`queryExecution.toRdd`): a map
+  * task gathers its copies into one record of primitive arrays per block,
+  * and one `HashPartitioner` shuffle of [[partitions]] partitions puts a
+  * block's records in one kernel task. Being an RDD shuffle inside the
+  * kernel DataFrame's lineage, it runs in the job of the action that reads
+  * the kernel, and AQE neither plans it as a stage of its own nor
+  * coalesces it. Taking the input's RDD executes the input's plan as far as
+  * its last exchange when the kernel DataFrame is built, so any exchange
+  * the input holds runs then, as a job of its own.
   *
   * In its target block a copy sits at local (li, lj) ∈ [-3, Side+3)²,
   * addressed row-major as `loc = (li+3)·Width + (lj+3)`, so the cells of a
@@ -41,6 +51,14 @@ private[operators] object BlockHalo {
 
   val Width: Int = Side + 2 * Halo
 
+  /** The shuffle key of rows whose cell index is null. No block has it: a
+    * block index is a cell index shifted right by six, plus or minus one. */
+  val NoBlock: (Long, Long) = (Long.MinValue, Long.MinValue)
+
+  /** The name of both kernels' RDDs, so their stages can be found in a
+    * listener's stage infos. */
+  val KernelName = "block-halo kernel"
+
   /** Whether `loc` is one of the block's own cells rather than a ring copy. */
   def owned(loc: Int): Boolean = {
     val li = loc / Width - Halo; val lj = loc % Width - Halo
@@ -50,52 +68,48 @@ private[operators] object BlockHalo {
   /** Cell index of an owned local coordinate of block `blk`. */
   def cell(blk: Long, local: Int): Long = (blk << Shift) + local
 
-  /** `df` with one row per block that reads the cell (`i`, `j`) and three
-    * more columns: the target block `blk_i`, `blk_j` and the copy's `loc`.
-    * A row whose cell index is null keeps one copy, with a null block and
-    * `loc` -1. */
-  def route(df: DataFrame, i: Column, j: Column): DataFrame = {
-    // block offsets that read a cell at in-block offset l on one axis; a
-    // cell with a null index has no neighbours, so its row keeps one copy
-    val keyed = i.isNotNull && j.isNotNull
-    def readers(l: Column) =
-      when(keyed && l < Halo, array(lit(-1), lit(0)))
-        .when(keyed && l >= Side - Halo, array(lit(0), lit(1)))
-        .otherwise(array(lit(0)))
-    val li = i.bitwiseAND(lit(Side - 1L)); val lj = j.bitwiseAND(lit(Side - 1L))
-    df.withColumn("_di", explode(readers(li)))
-      .withColumn("_dj", explode(readers(lj)))
-      .withColumn("blk_i", shiftright(i, Shift) + col("_di"))
-      .withColumn("blk_j", shiftright(j, Shift) + col("_dj"))
-      .withColumn("loc", coalesce(
-        ((li - col("_di") * Side + Halo) * Width + (lj - col("_dj") * Side + Halo)).cast("int"),
-        lit(-1)))
-      .drop("_di", "_dj")
-  }
+  /** Receives one block copy of a cell: the target block and the copy's
+    * `loc` in it. */
+  trait Copy { def apply(blkI: Long, blkJ: Long, loc: Int): Unit }
 
-  /** One block's routed rows and the prefix sum of their weights over
-    * `loc`: `prefix(c)` is the weight of the rows at locs below c, so the
-    * adjacent locs [a, b) weigh `prefix(b) - prefix(a)`. With weight 1 per
-    * row, `prefix(c)` is where cell c's rows start in `loc` order. */
-  final class Block[T](val blkI: Long, val blkJ: Long, val rows: Array[T], val prefix: Array[Long])
-
-  /** A partition's routed rows grouped into [[Block]]s. Every row of
-    * `rows` is read before this returns. */
-  def assemble[T: ClassTag](rows: Iterator[T])(blk: T => (Long, Long), loc: T => Int,
-                                              weight: T => Long): Iterator[Block[T]] = {
-    val byBlock = mutable.HashMap.empty[(Long, Long), mutable.ArrayBuilder[T]]
-    rows.foreach(r => byBlock.getOrElseUpdate(blk(r), mutable.ArrayBuilder.make[T]) += r)
-    byBlock.iterator.map { case ((bi, bj), b) =>
-      val rs = b.result()
-      val prefix = new Array[Long](Width * Width + 1)
-      rs.foreach(r => prefix(loc(r) + 1) += weight(r))
-      var c = 1
-      while (c < prefix.length) { prefix(c) += prefix(c - 1); c += 1 }
-      new Block(bi, bj, rs, prefix)
+  /** Calls `to` once per block that reads cell (`i`, `j`). */
+  def copies(i: Long, j: Long, to: Copy): Unit = {
+    val li = (i & (Side - 1)).toInt; val lj = (j & (Side - 1)).toInt
+    // a cell within Halo of a block edge is in the ring of the block past it
+    val djFrom = if (lj < Halo) -1 else 0
+    val djTo = if (lj >= Side - Halo) 1 else 0
+    var di = if (li < Halo) -1 else 0
+    while (di <= (if (li >= Side - Halo) 1 else 0)) {
+      var dj = djFrom
+      while (dj <= djTo) {
+        to((i >> Shift) + di, (j >> Shift) + dj,
+          (li - di * Side + Halo) * Width + (lj - dj * Side + Halo))
+        dj += 1
+      }
+      di += 1
     }
   }
 
-  /** Weight of the (2r+1)² window centred on loc `c`: one range per row. */
+  /** Partitions of the block shuffle: the session's
+    * `spark.sql.shuffle.partitions`. */
+  def partitions(spark: SparkSession): Int =
+    spark.sessionState.conf.defaultNumShufflePartitions
+
+  /** `kernel` over the blocks of `records`, one map task's record per
+    * block: the one shuffle that puts a block's records in one task. */
+  def shuffle[R: ClassTag, U: ClassTag](records: RDD[((Long, Long), R)], partitions: Int)(
+      kernel: Iterator[((Long, Long), R)] => Iterator[U]): RDD[U] =
+    records.partitionBy(new HashPartitioner(partitions)).mapPartitions(kernel).setName(KernelName)
+
+  /** A partition's records grouped by block. */
+  def byBlock[R](records: Iterator[((Long, Long), R)]): mutable.HashMap[(Long, Long), mutable.ArrayBuffer[R]] = {
+    val blocks = mutable.HashMap.empty[(Long, Long), mutable.ArrayBuffer[R]]
+    records.foreach { case (b, r) => blocks.getOrElseUpdate(b, mutable.ArrayBuffer.empty[R]) += r }
+    blocks
+  }
+
+  /** Weight of the (2r+1)² window centred on loc `c`, where `prefix(c)` is
+    * the weight at locs below c: one range per row. */
   def windowSum(prefix: Array[Long], c: Int, r: Int): Long = {
     var s = 0L
     var di = -r

@@ -1,7 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Exact (D,M)-outlier detection (SURVEY.md §2.9 C1, §2.3 J1).
   *
@@ -28,20 +33,24 @@ object ExactOutliers {
     * (Λ = D/(2√2)), the one HW1 grid. Every point within D of p lies in
     * p's 7x7 Λ-window, because 3Λ = 1.06·D; that 6% margin absorbs the
     * rounding of `floor(x / Λ)` and of Λ itself, and the window covers
-    * 6.1 D² where a 3x3 window of D-cells covers 9 D². The points take the
-    * block-halo routing of [[BlockHalo]] that N3/N7 use (≈1.2 rows per
-    * point), ONE hash exchange on (`blk_i`, `blk_j`) co-locates a block's
-    * points with its 3-cell ring, and a per-partition kernel counts
-    * `dist² ≤ D²` matches in tight loops over primitive double arrays.
-    * Inside a block the points are counting-sorted by cell, so a cell's
-    * 7x7 window is seven runs of seven adjacent cells, copied once into the
-    * arrays its residents scan. The n·E[ball] candidate pairs (104M at
-    * sf0.1) exist only as loop iterations inside the kernel, never as
-    * materialized rows — the genuine per-partition-imperative case; it
-    * benched ~4x faster than the equivalent equi-join + 104M-row
-    * filter/aggregate plan. AQE can't rebalance a skewed block here, but a
-    * block's work is bounded by geometry (≤ |block|·|7x7 occupancy|) and
-    * blocks hash-spread across partitions. Measured under DELIBERATE skew
+    * 6.1 D² where a 3x3 window of D-cells covers 9 D². One Spark job does
+    * the rest, on the cellified points' own RDD ([[BlockHalo]]): each map
+    * task reads its rows through `InternalRow` getters and ships one record
+    * of primitive arrays per block (the points of the block and of its
+    * 3-cell ring, ≈1.2 copies per point); one hash shuffle puts a block's
+    * records in one task, and a kernel counts `dist² ≤ D²` matches in tight
+    * loops over primitive double arrays. Inside a block the points are
+    * counting-sorted by cell, so a cell's 7x7 window is seven runs of seven
+    * adjacent cells, copied once into the arrays its residents scan. The
+    * n·E[ball] candidate pairs (104M at sf0.1) exist only as loop
+    * iterations inside the kernel, never as materialized rows — the
+    * genuine per-partition-imperative case; it benched ~4x faster than the
+    * equivalent equi-join + 104M-row filter/aggregate plan. A second hash
+    * shuffle of one (ids, counts) record per kernel task and target
+    * partition sums the counts of a repeated id, matching the oracle's
+    * GROUP BY id. Nothing about a block's work is rebalanced at run time,
+    * but it is bounded by geometry (≤ |block|·|7x7 occupancy|) and blocks
+    * hash-spread across partitions. Measured under DELIBERATE skew
     * (`graft.SkewProof`, one 100k-point hot D-cell = 1e10 intra-cell pairs,
     * 4 vCPUs, BASELINE.md): kernel 18 s / 16 s max task (that cell's loop)
     * vs [[ballCountsJoin]] 224 s / 192 s max task — AQE skew-join never
@@ -52,13 +61,18 @@ object ExactOutliers {
     * AQE's splitter AND the rest of the table is idle-parallel — at which
     * point the right fix is a smaller D (cell geometry), not rows.
     *
+    * Taking the cellified points' RDD executes their plan when this
+    * DataFrame is built: an exchange in it, such as the `Sources.spread`
+    * repartition of `q_exact_outliers`, runs then as a job of its own. The
+    * tails of [[outliers]] and [[outlierCount]] stay Catalyst plans over
+    * the returned DataFrame.
+    *
     * The distance predicate keeps the oracle's exact expression shape —
     * `(x-ox)*(x-ox)+(y-oy)*(y-oy) <= d*d`, same IEEE multiply/add order — so
-    * results stay bit-identical to the SQL twin. Each point yields one row;
-    * duplicate ids merge in a final |points|-row sum, matching the oracle's
-    * GROUP BY id. A point with a null coordinate has no cell and no row. The
-    * block index is never packed, so the cell index keeps its full 64-bit
-    * range.
+    * results stay bit-identical to the SQL twin. A point with a null
+    * coordinate has no cell and no row; a point with a null id counts in
+    * its neighbours' balls but has no row of its own. The block index is
+    * never packed, so the cell index keeps its full 64-bit range.
     *
     * Note on a rejected optimization (measured, not assumed): materializing
     * each unordered pair once — half-space cell offsets + lexicographic
@@ -70,8 +84,6 @@ object ExactOutliers {
   def ballCounts(points: DataFrame, d: Double,
                  capAbove: Option[Int] = None): DataFrame = {
     val spark = points.sparkSession
-    import spark.implicits._
-    val d2 = d * d
     // Early-exit cap (guide §1.2 "per-task work"): when the caller only
     // needs balls of size ≤ M exactly (the outlier queries), a point whose
     // count reaches M+1 is already provably a non-outlier, so the kernel
@@ -86,47 +98,114 @@ object ExactOutliers {
     val cells = GridOutliers.cellify(points.select(
         col("id").cast("long").as("id"),
         col("x").cast("double").as("x"), col("y").cast("double").as("y")), d)
-      .filter(col("i").isNotNull && col("j").isNotNull)
-    BlockHalo.route(cells, col("i"), col("j"))
-      .select(col("blk_i"), col("blk_j"), col("loc"), col("id"), col("x"), col("y"))
-      .repartition(col("blk_i"), col("blk_j"))
-      .as[(Long, Long, Int, java.lang.Long, Double, Double)]
-      .mapPartitions { it =>
-        // a block's rows: its own cells' points and its ring; residents are
-        // the own-cell rows that carry an id
-        BlockHalo.assemble(it)(r => (r._1, r._2), _._3, _ => 1L).flatMap { b =>
-          // weight 1 per point: cell c's points are start(c) until
-          // start(c+1) in loc order
-          val start = b.prefix
-          val next = start.map(_.toInt)
-          val sorted = b.rows.clone()
-          b.rows.foreach { r => sorted(next(r._3)) = r; next(r._3) += 1 }
-          val sx = sorted.map(_._5); val sy = sorted.map(_._6)
-          val out = scala.collection.mutable.ArrayBuilder.make[(Long, Long)]
-          // visit the occupied cells only, run by run: most of a block's
-          // Width² locs are empty, and a loop over all of them doubled the
-          // kernel's task time on the geo_batch points
-          var k = 0
-          while (k < sorted.length) {
-            val c = sorted(k)._3
-            val end = start(c + 1).toInt
-            if (BlockHalo.owned(c)) {
-              // the cell's residents share one copy of its 7x7 window
-              val wx = window(sx, start, c); val wy = window(sy, start, c)
-              while (k < end) {
-                val id = sorted(k)._4
-                if (id != null) out += ((id.longValue, ballCount(sx(k), sy(k), wx, wy, d2, cap)))
-                k += 1
-              }
-            }
-            k = end
-          }
-          out.result()
+      .select("id", "x", "y", "i", "j")
+    val n = BlockHalo.partitions(spark)
+    val counts = BlockHalo.shuffle(cells.queryExecution.toRdd.mapPartitions(new RoutePoints), n)(
+        new CountBalls(d * d, cap, n))
+      .partitionBy(new HashPartitioner(n))
+      .mapPartitions(new SumById)
+    spark.createDataFrame(counts, StructType(Seq(
+      StructField("id", LongType, nullable = false), StructField("ball_size", LongType, nullable = false))))
+  }
+
+  /** One map task's copies of the points for one block, column by column;
+    * `hasId` is false for a point with a null id. */
+  private final class PointRun(val locs: Array[Int], val ids: Array[Long], val hasId: Array[Boolean],
+                               val xs: Array[Double], val ys: Array[Double]) extends Serializable
+
+  /** Rows (id, x, y, i, j) to one [[PointRun]] per block; a row with a null
+    * cell index has no copy. A named class, not a lambda: `SparkContext.clean`
+    * reads a lambda's enclosing class file with ASM on every job. */
+  private final class RoutePoints
+      extends (Iterator[InternalRow] => Iterator[((Long, Long), PointRun)]) with Serializable {
+    private final class Builder {
+      val locs = new mutable.ArrayBuilder.ofInt; val ids = new mutable.ArrayBuilder.ofLong
+      val hasId = new mutable.ArrayBuilder.ofBoolean
+      val xs = new mutable.ArrayBuilder.ofDouble; val ys = new mutable.ArrayBuilder.ofDouble
+      def result() = new PointRun(locs.result(), ids.result(), hasId.result(), xs.result(), ys.result())
+    }
+
+    def apply(rows: Iterator[InternalRow]): Iterator[((Long, Long), PointRun)] = {
+      val blocks = mutable.HashMap.empty[(Long, Long), Builder]
+      rows.foreach { r =>
+        if (!r.isNullAt(3) && !r.isNullAt(4)) {
+          val hasId = !r.isNullAt(0)
+          val id = if (hasId) r.getLong(0) else 0L
+          val x = r.getDouble(1); val y = r.getDouble(2)
+          BlockHalo.copies(r.getLong(3), r.getLong(4), (bi, bj, loc) => {
+            val b = blocks.getOrElseUpdate((bi, bj), new Builder)
+            b.locs += loc; b.ids += id; b.hasId += hasId; b.xs += x; b.ys += y
+          })
         }
       }
-      .toDF("id", "cnt")
-      .groupBy(col("id"))
-      .agg(sum(col("cnt")).as("ball_size"))
+      blocks.iterator.map { case (blk, b) => blk -> b.result() }
+    }
+  }
+
+  /** Per partition: the ball counts of each block's own points, as one
+    * (ids, counts) record per target partition of the id merge. */
+  private final class CountBalls(d2: Double, cap: Long, partitions: Int)
+      extends (Iterator[((Long, Long), PointRun)] => Iterator[(Int, (Array[Long], Array[Long]))])
+      with Serializable {
+    def apply(records: Iterator[((Long, Long), PointRun)]): Iterator[(Int, (Array[Long], Array[Long]))] = {
+      val ids = Array.fill(partitions)(new mutable.ArrayBuilder.ofLong)
+      val counts = Array.fill(partitions)(new mutable.ArrayBuilder.ofLong)
+      BlockHalo.byBlock(records).valuesIterator.foreach { runs =>
+        // counting sort by loc: cell c's points are start(c) until start(c+1)
+        val start = new Array[Long](BlockHalo.Width * BlockHalo.Width + 1)
+        runs.foreach(_.locs.foreach(c => start(c + 1) += 1))
+        var c = 1
+        while (c < start.length) { start(c) += start(c - 1); c += 1 }
+        val n = start.last.toInt
+        val next = start.map(_.toInt)
+        val sloc = new Array[Int](n); val sid = new Array[Long](n); val has = new Array[Boolean](n)
+        val sx = new Array[Double](n); val sy = new Array[Double](n)
+        runs.foreach { r =>
+          var q = 0
+          while (q < r.locs.length) {
+            val p = next(r.locs(q)); next(r.locs(q)) += 1
+            sloc(p) = r.locs(q); sid(p) = r.ids(q); has(p) = r.hasId(q); sx(p) = r.xs(q); sy(p) = r.ys(q)
+            q += 1
+          }
+        }
+        // visit the occupied cells only, run by run: most of a block's
+        // Width² locs are empty, and a loop over all of them doubled the
+        // kernel's task time on the geo_batch points
+        var k = 0
+        while (k < n) {
+          val cell = sloc(k)
+          val end = start(cell + 1).toInt
+          if (BlockHalo.owned(cell)) {
+            // the cell's residents share one copy of its 7x7 window
+            val wx = window(sx, start, cell); val wy = window(sy, start, cell)
+            while (k < end) {
+              if (has(k)) {
+                val t = Math.floorMod(java.lang.Long.hashCode(sid(k)), partitions)
+                ids(t) += sid(k); counts(t) += ballCount(sx(k), sy(k), wx, wy, d2, cap)
+              }
+              k += 1
+            }
+          }
+          k = end
+        }
+      }
+      Iterator.range(0, partitions).filter(t => ids(t).length > 0)
+        .map(t => t -> (ids(t).result(), counts(t).result()))
+    }
+  }
+
+  /** Per partition of the id merge: one Row (id, ball_size) per id, its
+    * counts summed. */
+  private final class SumById extends (Iterator[(Int, (Array[Long], Array[Long]))] => Iterator[Row])
+      with Serializable {
+    def apply(records: Iterator[(Int, (Array[Long], Array[Long]))]): Iterator[Row] = {
+      val sums = mutable.LongMap.empty[Long]
+      records.foreach { case (_, (ids, counts)) =>
+        var q = 0
+        while (q < ids.length) { sums(ids(q)) = sums.getOrElse(ids(q), 0L) + counts(q); q += 1 }
+      }
+      sums.iterator.map { case (id, n) => Row(id, n) }
+    }
   }
 
   /** The points of cell `c`'s 7x7 window in a block counting-sorted by

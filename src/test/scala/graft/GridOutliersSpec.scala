@@ -117,4 +117,72 @@ class GridOutliersSpec extends AnyFunSuite with SharedSpark {
     assert(ExactOutliers.ballCounts(big.toDF("id", "x", "y"), d).as[(Long, Long)].collect().toMap == balls)
     assert(balls.values.exists(_ > 1), "the fixture must hold a pair within D")
   }
+
+  /** (n_points, sure, uncertain) of `rows` brute-forced on the driver with
+    * the operator's floor(x / Λ); a point with a null coordinate counts in
+    * n_points only. */
+  private def bruteSummary(rows: Seq[(Long, Option[Double], Option[Double])], d: Double, m: Int) = {
+    val lam = GridOutliers.lambda(d)
+    val sizes = rows.collect { case (_, Some(x), Some(y)) => (math.floor(x / lam).toLong, math.floor(y / lam).toLong) }
+      .groupMapReduce(identity)(_ => 1L)(_ + _)
+    def window(c: (Long, Long), r: Int) =
+      (for (di <- -r to r; dj <- -r to r) yield sizes.getOrElse((c._1 + di, c._2 + dj), 0L)).sum
+    val sure = sizes.collect { case (c, s) if window(c, 1) <= m && window(c, 3) <= m => s }.sum
+    val unc = sizes.collect { case (c, s) if window(c, 1) <= m && window(c, 3) > m => s }.sum
+    (rows.length.toLong, sure, unc)
+  }
+
+  test("summary equals a driver-side brute force on Λ-cell and block edges, duplicates and nulls") {
+    val rng = new scala.util.Random(1717)
+    for (d <- List(0.5, 2.0); m <- List(2, 4)) {
+      val lam = GridOutliers.lambda(d)
+      // on a Λ-cell edge, one cell off it, or up to 3Λ off a block edge
+      // (multiples of 64Λ), in all four quadrants
+      def coord(): Double = {
+        val e = (rng.nextInt(7) - 3) * 64 * lam
+        Seq(e, e - lam, e + lam, e + (rng.nextInt(9) - 4) * lam,
+          e - rng.nextDouble() * 3 * lam, e + rng.nextDouble() * 3 * lam)(rng.nextInt(6))
+      }
+      val bases = List.fill(400)((coord(), coord()))
+      // every 5th point is repeated up to three times: duplicate coordinates
+      val pts = bases.zipWithIndex.flatMap { case (p, k) => List.fill(if (k % 5 == 0) 1 + rng.nextInt(3) else 1)(p) }
+      val rows = pts.zipWithIndex.map { case ((x, y), k) => (k.toLong, Option(x), Option(y)) } ++
+        Seq((-1L, None, Some(1.0)), (-2L, Some(1.0), None), (-3L, None, None))
+      val row = GridOutliers.summary(rows.toDF("id", "x", "y"), d, m).head()
+      val want = bruteSummary(rows, d, m)
+      assert((row.getLong(0), row.getLong(1), row.getLong(2)) == want, s"d=$d m=$m")
+      assert(want._2 > 0 && want._3 > 0, s"the fixture must classify both ways (d=$d m=$m)")
+    }
+  }
+
+  test("neighborStats equals brute-force N3/N7 on a cell table with sizes > 1") {
+    val rng = new scala.util.Random(1718)
+    def coord(): Long = (rng.nextInt(5) - 2) * 64L + rng.nextInt(9) - 4
+    val keyed = List.fill(300)((coord(), coord())).distinct.map { case (i, j) => (i, j, 2L + rng.nextInt(6)) }
+    // a cell given in two rows merges into one; rows with a null index
+    // have no stats
+    val repeated = keyed.take(5).map { case (i, j, _) => (i, j, 3L) }
+    val rows = (keyed ++ repeated).map { case (i, j, s) => (Option(i), Option(j), s) } ++
+      Seq((None, Some(1L), 4L), (Some(1L), None, 5L), (None, None, 6L))
+    val size = (keyed ++ repeated).groupMapReduce(c => (c._1, c._2))(_._3)(_ + _)
+    def window(i: Long, j: Long, r: Int): Long =
+      (for (di <- -r to r; dj <- -r to r) yield size.getOrElse((i + di, j + dj), 0L)).sum
+    val want = size.map { case ((i, j), s) => (i, j, s, window(i, j, 1), window(i, j, 3)) }.toSet
+    val got = GridOutliers.neighborStats(rows.toDF("i", "j", "size"))
+      .select("i", "j", "size", "n3", "n7").as[(Long, Long, Long, Long, Long)].collect()
+    assert(got.length == size.size)
+    assert(got.toSet == want)
+  }
+
+  test("topKCells sorts a null cell index last, as the oracle's ORDER BY") {
+    // Λ = 1: cells (0, 5), (3, 2) and (null, 5) hold one point each, (1, 1) two
+    val d = 2.0 * math.sqrt(2.0)
+    assert(GridOutliers.lambda(d) == 1.0)
+    val rows = Seq((1L, Option(0.5), 5.5), (2L, None, 5.5), (3L, Option(3.5), 2.5),
+      (4L, Option(1.5), 1.5), (5L, Option(1.25), 1.75)).toDF("id", "x", "y")
+    def top(k: Int) = GridOutliers.topKCells(rows, d, k).select("size", "i", "j").collect()
+      .map(r => (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Long]), r.getLong(2))).toSeq
+    assert(top(2) == Seq((1L, Some(0L), 5L), (1L, Some(3L), 2L)))
+    assert(top(4) == Seq((1L, Some(0L), 5L), (1L, Some(3L), 2L), (1L, None, 5L), (2L, Some(1L), 1L)))
+  }
 }
